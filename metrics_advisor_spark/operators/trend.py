@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from metrics_advisor_spark.operators.xcorr import pearson, present
+
 SERIES_KEY = ("metric", "series")
 
 
@@ -595,7 +597,8 @@ def spearman_corr(hourly: DataFrame, min_slots: int = 3) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    ranked = hourly.select(
+    rho, n_slots = pearson("ra", "rb")
+    ranked = hourly.where(present()).select(
         "metric",
         "slot_epoch",
         F.rank()
@@ -615,13 +618,7 @@ def spearman_corr(hourly: DataFrame, min_slots: int = 3) -> DataFrame:
         a.join(b, "slot_epoch")
         .where(F.col("metric_a") < F.col("metric_b"))
         .groupBy("metric_a", "metric_b")
-        .agg(
-            F.try_divide(
-                F.covar_samp("ra", "rb"),
-                F.stddev_samp("ra") * F.stddev_samp("rb"),
-            ).alias("rho"),
-            F.count(F.lit(1)).alias("n_slots"),
-        )
+        .agg(rho.alias("rho"), n_slots.alias("n_slots"))
         .where(F.col("n_slots") >= min_slots)
     )
     return out.where(
@@ -642,7 +639,10 @@ def acf_profile(hourly: DataFrame, max_lag: int = 12,
     Correlations over fewer than ``min_pairs`` overlaps or with a
     constant side are dropped (NaN across engines otherwise).
     """
-    s = hourly.select("metric", F.col("slot_epoch").alias("slot"), "value")
+    acf, n_pairs = pearson("value", "v_lag")
+    s = hourly.where(present()).select(
+        "metric", F.col("slot_epoch").alias("slot"), "value"
+    )
     lagged = s.select(
         "metric",
         F.explode(F.sequence(F.lit(1), F.lit(max_lag))).alias("lag"),
@@ -652,13 +652,7 @@ def acf_profile(hourly: DataFrame, max_lag: int = 12,
     out = (
         s.join(lagged, ["metric", "slot"])
         .groupBy("metric", "lag")
-        .agg(
-            F.try_divide(
-                F.covar_samp("value", "v_lag"),
-                F.stddev_samp("value") * F.stddev_samp("v_lag"),
-            ).alias("acf"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
+        .agg(acf.alias("acf"), n_pairs)
         .where(F.col("n_pairs") >= min_pairs)
     )
     return out.where(

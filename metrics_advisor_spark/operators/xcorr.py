@@ -16,7 +16,7 @@ Spark-first plan (no UDF anywhere):
 2. The objective side (≤ a handful of metrics, F4) is broadcast, so the
    pairing join never shuffles the big candidate side by anything other
    than its natural (ts) key — and with the broadcast hint, not at all.
-3. ``corr()`` (Pearson) per (bucket, obj, cand, lag) — a hash aggregate
+3. ``pearson`` per (bucket, obj, cand, lag) — a hash aggregate
    with map-side partials.  Pearson of the two windows IS zero-normalized
    cross-correlation at that lag, matching mathbox ``ncc``.
 4. Best lag via one row_number window over the tiny aggregate output
@@ -27,11 +27,20 @@ Deviation from reference (documented, SURVEY Q3): windows align on
 timestamps, not sample positions, so series with missing samples stay
 aligned; at bucket edges a lagged candidate sample may come from the
 neighboring bucket (full-overlap correlation) instead of truncating.
+
+Deviation from reference (missing samples): a null or NaN sample is
+missing (``present``).  A pair with a missing side is left out of the
+window, so ``corr`` is Pearson's r of the complete pairs and ``n_pairs``
+counts only those.  The reference's numpy arrays would carry a NaN into
+the whole window's correlation instead.  ``bucket_correlation``,
+``positional_correlation``, ``corr_matrix``, ``corr_matrix_blocked``,
+the streaming correlation and the trend module's Spearman and ACF all
+share ``present`` and ``pearson``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -59,6 +68,84 @@ def lag_explode(
     ).withColumn(
         "join_ts",
         F.timestamp_add("SECOND", (-F.col("lag") * step_seconds).cast("int"), F.col("ts")),
+    )
+
+
+def present() -> Column:
+    """The one rule for missing samples: a null or NaN ``value`` is missing.
+
+    Every correlation drops its missing samples before it pairs them, so
+    a pair with a missing side never reaches ``pearson``.
+    """
+    return F.col("value").isNotNull() & ~F.isnan("value")
+
+
+def pearson(x: str, y: str) -> tuple[Column, Column]:
+    """Pearson's r of columns ``x`` and ``y`` over a group's rows, and the
+    row count, as ``corr`` and ``n_pairs``.
+
+    Each row must pair two present samples (``present``), so that the
+    covariance and both standard deviations are taken over the same
+    complete pairs.  Spelled out rather than ``corr()``: under ANSI mode
+    corr() raises DIVIDE_BY_ZERO on a zero-variance window (a constant
+    series in a bucket); try_divide yields NULL there, which callers
+    filter — the contract DuckDB's corr() has.
+    """
+    return (
+        F.try_divide(
+            F.covar_samp(x, y), F.stddev_samp(x) * F.stddev_samp(y)
+        ).alias("corr"),
+        F.count(F.lit(1)).alias("n_pairs"),
+    )
+
+
+def _lagged_pearson(
+    objectives: DataFrame,
+    candidates: DataFrame,
+    step: int,
+    *,
+    lag_max: int,
+    min_pairs: int,
+    same_bucket: bool = True,
+) -> DataFrame:
+    """Per-(bucket, obj, cand, lag) Pearson of two keyed sample sides.
+
+    Both sides are (metric, series, bucket_id, key, value) with an integer
+    ``key`` that advances by ``step`` per sample.  Missing samples are
+    dropped, and each candidate row is replicated per lag to pair with the
+    objective sample at key − lag·step.  The objective side is broadcast,
+    so the only aggregate is one hash aggregate with map-side partials.
+    """
+    obj = objectives.where(present()).select(
+        F.col("metric").alias("obj_metric"),
+        F.col("series").alias("obj_series"),
+        "bucket_id",
+        F.col("key").alias("obj_key"),
+        F.col("value").alias("obj_value"),
+    )
+    cand = candidates.where(present()).select(
+        F.col("metric").alias("cand_metric"),
+        F.col("series").alias("cand_series"),
+        F.col("bucket_id").alias("cand_bucket_id"),
+        F.explode(F.sequence(F.lit(-lag_max), F.lit(lag_max))).alias("lag"),
+        "key",
+        F.col("value").alias("cand_value"),
+    )
+    cand = cand.withColumn(
+        "join_key", F.col("key") - F.col("lag").cast("long") * step
+    )
+    cond = cand["join_key"] == obj["obj_key"]
+    if same_bucket:
+        cond = cond & (cand["cand_bucket_id"] == obj["bucket_id"])
+    return (
+        cand.join(F.broadcast(obj), cond, "inner")
+        .groupBy(
+            "bucket_id", "obj_metric", "obj_series",
+            "cand_metric", "cand_series", "lag",
+        )
+        .agg(*pearson("obj_value", "cand_value"))
+        .filter(F.col("n_pairs") >= min_pairs)
+        .filter(F.col("corr").isNotNull())
     )
 
 
@@ -96,46 +183,21 @@ def bucket_correlation(
         tmin_obj = F.col("tmin")
     else:
         tmin_obj = F.lit(tmin)
-    obj = objectives.select(
-        F.col("metric").alias("obj_metric"),
-        F.col("series").alias("obj_series"),
-        F.col("ts").alias("obj_ts"),
-        F.col("value").alias("obj_value"),
-        F.floor(
-            (F.unix_timestamp("ts") - tmin_obj) / F.lit(bucket_seconds)
-        ).alias("bucket_id"),
-    )
-    cand_in = candidates.select(
-        "metric", "series", "ts", "value",
-        F.floor(
-            (F.unix_timestamp("ts") - tmin_obj) / F.lit(bucket_seconds)
-        ).alias("cand_bucket_id"),
-    )
-    cand = lag_explode(
-        cand_in, lag_max, step_seconds, passthrough=("cand_bucket_id",)
-    )
-    cond = cand["join_ts"] == obj["obj_ts"]
-    if same_bucket:
-        cond = cond & (cand["cand_bucket_id"] == obj["bucket_id"])
-    joined = cand.join(F.broadcast(obj), cond, "inner")
-    return (
-        joined.groupBy(
-            "bucket_id", "obj_metric", "obj_series",
-            "cand_metric", "cand_series", "lag",
+    bucket = F.floor((F.unix_timestamp("ts") - tmin_obj) / F.lit(bucket_seconds))
+
+    def keyed(df: DataFrame) -> DataFrame:
+        return df.select(
+            "metric", "series", bucket.alias("bucket_id"),
+            F.unix_micros("ts").alias("key"), "value",
         )
-        .agg(
-            # Pearson spelled explicitly: under ANSI mode corr() raises
-            # DIVIDE_BY_ZERO on zero-variance windows (constant series in a
-            # bucket); try_divide yields NULL there, which we filter — the
-            # same contract DuckDB's corr() has.
-            F.try_divide(
-                F.covar_samp("obj_value", "cand_value"),
-                F.stddev_samp("obj_value") * F.stddev_samp("cand_value"),
-            ).alias("corr"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
-        .filter(F.col("n_pairs") >= min_pairs)
-        .filter(F.col("corr").isNotNull())
+
+    return _lagged_pearson(
+        keyed(objectives),
+        keyed(candidates),
+        step_seconds * 1_000_000,
+        lag_max=lag_max,
+        min_pairs=min_pairs,
+        same_bucket=same_bucket,
     )
 
 
@@ -171,54 +233,30 @@ def positional_correlation(
     missing rows drift out of time alignment — reproduced here exactly:
     each series gets a 0-based row_number in ts order, bucket = pos //
     count_bucket, and a lag-k pair joins obj position p with candidate
-    position p + k inside the same positional bucket.
+    position p + k inside the same positional bucket.  Positions are
+    assigned before missing samples are dropped, so a missing value
+    still takes its slot, as it does in the reference's arrays.
 
     Same output schema as ``bucket_correlation``.  One row_number window
     per side (shuffle on (metric, series)) + the same broadcast join —
-    the positional index replaces the timestamp as the join key.
+    the positional index replaces the timestamp as the join key.  The
+    candidate side keeps its (metric, series) partitioning through the
+    join, so the aggregate needs no further shuffle.
     """
     w = Window.partitionBy("metric", "series").orderBy("ts")
-    pos = (F.row_number().over(w) - 1).alias("pos")
-    obj = objectives.select(
-        F.col("metric").alias("obj_metric"),
-        F.col("series").alias("obj_series"),
-        F.col("value").alias("obj_value"),
-        pos,
-    ).withColumn("bucket_id", F.floor(F.col("pos") / count_bucket))
-    cand = (
-        candidates.select(
-            F.col("metric").alias("cand_metric"),
-            F.col("series").alias("cand_series"),
-            F.col("value").alias("cand_value"),
-            pos,
-        )
-        .select(
-            "*",
-            F.explode(F.sequence(F.lit(-lag_max), F.lit(lag_max))).alias("lag"),
-        )
-        .withColumn("join_pos", F.col("pos") - F.col("lag"))
-        .withColumn("cand_bucket_id", F.floor(F.col("pos") / count_bucket))
-    )
-    joined = cand.join(
-        F.broadcast(obj),
-        (cand["join_pos"] == obj["pos"])
-        & (cand["cand_bucket_id"] == obj["bucket_id"]),
-        "inner",
-    )
-    return (
-        joined.groupBy(
-            "bucket_id", "obj_metric", "obj_series",
-            "cand_metric", "cand_series", "lag",
-        )
-        .agg(
-            F.try_divide(
-                F.covar_samp("obj_value", "cand_value"),
-                F.stddev_samp("obj_value") * F.stddev_samp("cand_value"),
-            ).alias("corr"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
-        .filter(F.col("n_pairs") >= min_pairs)
-        .filter(F.col("corr").isNotNull())
+
+    def keyed(df: DataFrame) -> DataFrame:
+        return df.select(
+            "metric", "series", (F.row_number().over(w) - 1).alias("key"),
+            "value",
+        ).withColumn("bucket_id", F.floor(F.col("key") / count_bucket))
+
+    return _lagged_pearson(
+        keyed(objectives),
+        keyed(candidates),
+        1,
+        lag_max=lag_max,
+        min_pairs=min_pairs,
     )
 
 
@@ -233,6 +271,7 @@ def corr_matrix(signals: DataFrame, min_pairs: int = 2) -> DataFrame:
     OUTPUT is quadratic in metrics, not the shuffle: rows join only
     within equal timestamps.
     """
+    signals = signals.where(present())
     a = signals.select(
         F.col("metric").alias("metric_a"),
         F.col("ts"),
@@ -247,13 +286,7 @@ def corr_matrix(signals: DataFrame, min_pairs: int = 2) -> DataFrame:
         a.join(b, "ts")
         .filter(F.col("metric_a") < F.col("metric_b"))
         .groupBy("metric_a", "metric_b")
-        .agg(
-            F.try_divide(
-                F.covar_samp("va", "vb"),
-                F.stddev_samp("va") * F.stddev_samp("vb"),
-            ).alias("corr"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
+        .agg(*pearson("va", "vb"))
         .filter(F.col("n_pairs") >= min_pairs)
         .filter(F.col("corr").isNotNull())
     )
@@ -302,7 +335,8 @@ def corr_matrix_blocked(
     from pyspark.sql import types as T
 
     per_ts = (
-        signals.groupBy("ts", "metric")
+        signals.where(present())
+        .groupBy("ts", "metric")
         .agg(
             F.count(F.lit(1)).cast("double").alias("c"),
             F.sum("value").alias("s"),
@@ -421,89 +455,6 @@ def corr_matrix_blocked(
             .distinct()
         )
     return out
-
-
-def ncc_cogrouped(
-    objectives: DataFrame,
-    candidates: DataFrame,
-    *,
-    tmin: int,
-    bucket_seconds: int = 600,
-    lag_max: int = 3,
-    min_pairs: int = 2,
-) -> DataFrame:
-    """P8 option (b): mathbox-style ncc via cogrouped ``applyInPandas``.
-
-    Parity fallback to the SQL plan (SURVEY §2.6 P8): obj and candidate
-    samples are cogrouped per bucket; inside the pandas function each
-    (obj, cand) pair is aligned POSITIONALLY within the bucket window
-    (the reference's array semantics, metrics_advisor.py:186-192) and all
-    lags are computed vectorized in numpy.  Same output schema as
-    ``bucket_correlation``.
-
-    Scale: one shuffle on bucket_id; a bucket's groups must fit one task
-    (40 samples × member series — small by construction, because only
-    anomalous series enter buckets).
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("bucket_id", T.LongType()),
-            T.StructField("obj_metric", T.StringType()),
-            T.StructField("obj_series", T.StringType()),
-            T.StructField("cand_metric", T.StringType()),
-            T.StructField("cand_series", T.StringType()),
-            T.StructField("lag", T.IntegerType()),
-            T.StructField("corr", T.DoubleType()),
-            T.StructField("n_pairs", T.LongType()),
-        ]
-    )
-
-    def with_bucket(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "bucket_id",
-            F.floor(
-                (F.unix_timestamp("ts") - F.lit(tmin)) / F.lit(bucket_seconds)
-            ),
-        )
-
-    def fn(key: tuple, obj_pdf: pd.DataFrame, cand_pdf: pd.DataFrame):
-        bucket_id = int(key[0])
-        out = []
-        for (om, os_), og in obj_pdf.groupby(["metric", "series"], sort=True):
-            a = og.sort_values("ts")["value"].to_numpy(dtype=np.float64)
-            for (cm, cs), cg in cand_pdf.groupby(["metric", "series"],
-                                                 sort=True):
-                b = cg.sort_values("ts")["value"].to_numpy(dtype=np.float64)
-                for lag in range(-lag_max, lag_max + 1):
-                    # pair a[i] with b[i + lag], truncated to the overlap
-                    if lag >= 0:
-                        aa, bb = a[: b.size - lag], b[lag:]
-                    else:
-                        aa, bb = a[-lag:], b[: a.size + lag]
-                    m = min(aa.size, bb.size)
-                    aa, bb = aa[:m], bb[:m]
-                    if m < min_pairs:
-                        continue
-                    sa, sb = aa.std(ddof=1), bb.std(ddof=1)
-                    if sa == 0.0 or sb == 0.0 or np.isnan(sa) or np.isnan(sb):
-                        continue
-                    c = float(np.corrcoef(aa, bb)[0, 1])
-                    out.append(
-                        (bucket_id, om, os_, cm, cs, lag, c, m)
-                    )
-        return pd.DataFrame(out, columns=[f.name for f in schema.fields])
-
-    return (
-        with_bucket(objectives)
-        .groupBy("bucket_id")
-        .cogroup(with_bucket(candidates).groupBy("bucket_id"))
-        .applyInPandas(fn, schema)
-    )
 
 
 def rank_correlations(best: DataFrame, top_k: int | None = None) -> DataFrame:

@@ -16,7 +16,8 @@ directly, so the upstream "reshape" step is optional:
 - series  = label VALUES joined with ':' in label-key order — matching
   the reshaper's flattened CSV headers (``vda:172.17.16.11:9100`` =
   device:instance, keys sorted)
-- one row per sample; the string sample value casts to double
+- one row per sample; the string sample value casts to double, and a
+  ``"NaN"`` sample becomes null, the missing value the CSV path reads
 
 All transforms are JVM-side (explode + map/array functions over an
 explicit schema — no Python), so ingest is one distributed scan with
@@ -117,7 +118,9 @@ def read_prometheus_json(
         F.timestamp_seconds(
             F.element_at("v", 1).cast("long")
         ).alias("ts"),
-        F.element_at("v", 2).cast("double").alias("value"),
+        F.nanvl(
+            F.element_at("v", 2).cast("double"), F.lit(None).cast("double")
+        ).alias("value"),
     )
 
 

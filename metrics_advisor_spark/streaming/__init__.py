@@ -3,7 +3,6 @@
 from metrics_advisor_spark.streaming.pipeline import (
     SIGNAL_SCHEMA,
     detect_anomalies_stateful,
-    detect_anomalies_tws,
     latest_by_key_stream,
     run_to_memory,
     session_stats_stream,
@@ -20,7 +19,6 @@ from metrics_advisor_spark.streaming.pipeline import (
 __all__ = [
     "SIGNAL_SCHEMA",
     "detect_anomalies_stateful",
-    "detect_anomalies_tws",
     "latest_by_key_stream",
     "run_to_memory",
     "session_stats_stream",

@@ -44,6 +44,11 @@ from metrics_advisor_spark.operators.detect import (
     moving_median_np,
     stl_outliers_np,
 )
+from metrics_advisor_spark.operators.xcorr import (
+    lag_explode,
+    pearson,
+    present,
+)
 
 SIGNAL_SCHEMA = T.StructType(
     [
@@ -192,8 +197,7 @@ def streaming_xcorr(
     corr aggregate per (bucket, pair, lag) — chained stateful operators
     (join → agg), supported on Spark ≥3.4.
     """
-    from metrics_advisor_spark.operators.xcorr import lag_explode
-
+    stream = stream.where(present())
     obj = (
         stream.filter(F.col("metric").isin(*obj_metrics))
         .select(
@@ -219,13 +223,7 @@ def streaming_xcorr(
             "cand_series",
             "lag",
         )
-        .agg(
-            F.try_divide(
-                F.covar_samp("obj_value", "cand_value"),
-                F.stddev_samp("obj_value") * F.stddev_samp("cand_value"),
-            ).alias("corr"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
+        .agg(*pearson("obj_value", "cand_value"))
     )
 
 
@@ -370,129 +368,6 @@ def detect_anomalies_stateful(
         _STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-def detect_anomalies_tws(
-    stream: DataFrame,
-    *,
-    median_window: int = 5,
-    step_seconds: float = 15.0,
-    f_min: float = 0.01 / 15,
-    sigma_level: float = 3.0,
-    cp_pvalue: float = 0.05,
-    cp_permutations: int = 100,
-    max_state_samples: int = 2048,
-) -> DataFrame:
-    """detect_anomalies_stateful re-expressed on the Spark 4 state API
-    (``transformWithStateInPandas``, SPARK-49564).
-
-    Same semantics as the applyInPandasWithState variant: a bounded
-    per-series sample buffer plus emitted-anomaly sets, emitting only
-    NEW anomalies per micro-batch.  The new API stores each state piece
-    in its own typed ``ListState`` (columnar, individually updatable)
-    instead of one opaque state tuple — at scale that means the state
-    store writes only the pieces that changed, and TTL/timers are
-    available for free if eviction is ever needed.
-
-    Requires the RocksDB state store provider::
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-
-    ALSO requires the ``protobuf`` Python package on driver and
-    executors (the transformWithState state protocol is protobuf-based;
-    without it the query fails at plan time with
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE).  protobuf is not
-    in this container, so the accompanying test auto-skips; the
-    applyInPandasWithState variant above is the one exercised here.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _DetectProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._buf = handle.getListState("buf", "t LONG, v DOUBLE")
-            self._cp = handle.getListState("emitted_cp", "t LONG")
-            self._out = handle.getListState("emitted_out", "t LONG")
-
-        def handleInputRows(
-            self, key: Any, rows: Iterator[pd.DataFrame], timerValues: Any
-        ) -> Iterator[pd.DataFrame]:
-            metric, series = key
-            ts_buf = [int(t) for (t, _v) in self._buf.get()]
-            val_buf = [float(v) for (_t, v) in self._buf.get()]
-            emitted_cp = {int(t) for (t,) in self._cp.get()}
-            emitted_out = {int(t) for (t,) in self._out.get()}
-
-            for pdf in rows:
-                ts_buf.extend(
-                    int(t) for t in pdf["ts"].astype("int64") // 1_000_000_000
-                )
-                val_buf.extend(float(v) for v in pdf["value"])
-
-            order = np.argsort(ts_buf, kind="stable")[-max_state_samples:]
-            ts_arr = np.asarray(ts_buf, dtype=np.int64)[order]
-            val_arr = np.asarray(val_buf, dtype=np.float64)[order]
-
-            med = moving_median_np(val_arr, median_window)
-            cps = e_divisive_np(
-                med,
-                pvalue=cp_pvalue,
-                permutations=cp_permutations,
-                seed=_series_seed(metric, series),
-            )
-            outs = stl_outliers_np(
-                val_arr,
-                window=median_window,
-                step_seconds=step_seconds,
-                f_min=f_min,
-                level=sigma_level,
-            )
-
-            new_rows: list[tuple[str, int, float]] = []
-            for i in cps:
-                t = int(ts_arr[i])
-                if t not in emitted_cp:
-                    emitted_cp.add(t)
-                    new_rows.append(("changepoint", t, float(val_arr[i])))
-            for i in outs:
-                t = int(ts_arr[int(i)])
-                if t not in emitted_out:
-                    emitted_out.add(t)
-                    new_rows.append(("outlier", t, float(val_arr[int(i)])))
-
-            self._buf.put(
-                [(int(t), float(v)) for t, v in zip(ts_arr, val_arr)]
-            )
-            self._cp.put([(t,) for t in sorted(emitted_cp)])
-            self._out.put([(t,) for t in sorted(emitted_out)])
-
-            if new_rows:
-                kinds, ts_e, vals = zip(*new_rows)
-                yield pd.DataFrame(
-                    {
-                        "metric": metric,
-                        "series": series,
-                        "kind": list(kinds),
-                        "ts": pd.to_datetime(list(ts_e), unit="s"),
-                        "value": list(vals),
-                    }
-                )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("metric", "series").transformWithStateInPandas(
-        _DetectProcessor(),
-        STREAM_ANOMALY_SCHEMA,
-        "append",
-        "None",
     )
 
 

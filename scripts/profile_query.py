@@ -5,8 +5,8 @@ Usage:
     python scripts/profile_query.py q1 q2 ...
 
 For each query: forces the plan through the noop sink, then prints the
-per-stage task counts and aggregate metrics (wall, executor run/CPU
-time, shuffle bytes) from the AppStatusStore, so AQE-coalesced
+per-stage task counts and aggregate metrics (wall, executor run time,
+JVM CPU time, shuffle bytes) from the AppStatusStore, so AQE-coalesced
 single-task stages and fetch-wait-bound stages are visible without the
 UI.  Run twice per query: the second (warm) run is the honest one.
 """
@@ -73,7 +73,8 @@ def main() -> int:
                 print(
                     f"  stage {s.stageId():>4} tasks={s.numCompleteTasks():>4} "
                     f"runTime={s.executorRunTime()/1e3:7.2f}s "
-                    f"cpu={s.executorCpuTime()/1e9:7.2f}s "
+                    # JVM only: Python-worker CPU of applyInPandas stages is not in it
+                    f"jvm_cpu={s.executorCpuTime()/1e9:7.2f}s "
                     f"shufR={s.shuffleReadBytes()/1e6:8.1f}MB "
                     f"shufW={s.shuffleWriteBytes()/1e6:8.1f}MB "
                     f"in={s.inputBytes()/1e6:8.1f}MB "

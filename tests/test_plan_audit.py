@@ -36,6 +36,8 @@ REPRESENTATIVE = [
     "dup_cluster_purity",     # two-level aggregate
     "dim_covariance",         # sorted sufficient-sum folds
     "topk_correlated",        # xcorr ranking
+    "positional_xcorr",       # xcorr keyed by row position
+    "corr_matrix_blocked",    # gram-partial correlation blocks
     "ivfpq_search",           # composed vector index (two codebooks)
     "audio_windows",          # real-codec mapInPandas path
 ]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,6 +18,26 @@ def prom_signals(spark):
     sig = ingest_prom_tar(spark, BUNDLE).cache()
     yield sig
     sig.unpersist()
+
+
+def test_nan_sample_reads_as_null(spark, tmp_path):
+    """A "NaN" sample is missing, as in the CSV path: it reads as null, so
+    a constant series with one NaN sample is dropped by the range gate."""
+    from metrics_advisor_spark.operators.validity import range_filter
+    from metrics_advisor_spark.sources.prom_json import read_prometheus_json
+
+    t0 = 1640588307
+    values = [[t0 + 15 * i, "NaN" if i == 7 else "3"] for i in range(40)]
+    doc = {"status": "success", "data": {"resultType": "matrix", "result": [
+        {"metric": {"instance": "db-1"}, "values": values},
+    ]}}
+    (tmp_path / "const_metric.json").write_text(json.dumps(doc))
+    sig = read_prometheus_json(spark, str(tmp_path))
+    rows = sig.orderBy("ts").collect()
+    assert len(rows) == 40
+    assert rows[7]["value"] is None
+    assert {r["value"] for r in rows} == {3.0, None}
+    assert range_filter(sig, 0.005).count() == 0
 
 
 def test_prom_ingest_shape(prom_signals):

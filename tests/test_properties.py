@@ -16,7 +16,9 @@ from metrics_advisor_spark.operators.normalize import get_relative
 from metrics_advisor_spark.operators.validity import range_filter
 from metrics_advisor_spark.operators.xcorr import best_lag, bucket_correlation
 
-from conftest import make_signals_df
+from conftest import make_signals_df, pairwise_lagged_pearson
+
+T0 = 1640588307  # make_signals_df's default origin
 
 PROP = settings(max_examples=5, deadline=None)
 
@@ -65,6 +67,33 @@ def test_affine_candidate_preserves_abs_corr(spark, scale, offset):
         return r["lag"], round(abs(r["corr"]), 6)
 
     assert run(cand) == run(cand * scale + offset)
+
+
+@PROP
+@given(
+    obj_missing=st.sets(st.integers(0, 39), max_size=10),
+    cand_missing=st.sets(st.integers(0, 39), max_size=10),
+)
+def test_missing_samples_give_pairwise_pearson(spark, obj_missing, cand_missing):
+    """With 0–10 missing samples on either side, the correlation at every
+    lag is numpy's Pearson over the complete pairs, and n_pairs counts
+    them."""
+    rng = np.random.default_rng(11)
+    obj = rng.normal(0, 1, 40)
+    cand = np.roll(obj, 1) + rng.normal(0, 0.5, 40)
+    obj[sorted(obj_missing)] = np.nan
+    cand[sorted(cand_missing)] = np.nan
+    rows = bucket_correlation(
+        make_signals_df(spark, {("obj", "s"): obj}),
+        make_signals_df(spark, {("cand", "s"): cand}),
+        tmin=T0, lag_max=3,
+    ).collect()
+    got = {(r["bucket_id"], r["lag"]): (r["corr"], r["n_pairs"]) for r in rows}
+    want = pairwise_lagged_pearson(obj, cand, 3)
+    assert set(got) == set(want)
+    for key, (corr, n_pairs) in want.items():
+        assert got[key][1] == n_pairs, key
+        assert abs(got[key][0] - corr) < 1e-9, key
 
 
 @PROP

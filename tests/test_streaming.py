@@ -4,7 +4,6 @@ stateful change-point detection with incremental emission."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from metrics_advisor_spark.streaming import (
@@ -188,69 +187,6 @@ def test_stateful_detection_late_data(spark, tmp_path):
     third = drain()
     outs3 = [r for r in third if r["kind"] == "outlier"]
     assert outs3 == outs2  # nothing new: the too-late row fell off
-
-
-def test_tws_detection_incremental(spark, tmp_path):
-    """Spark 4 state API (transformWithStateInPandas) variant of the
-    stateful detector: same two-micro-batch scenario as
-    test_stateful_detection_incremental, same emit-once semantics.
-    Requires the RocksDB state store provider, and protobuf for the
-    transformWithState state protocol (absent here → skip)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState needs the protobuf package",
-    )
-    from metrics_advisor_spark.streaming import detect_anomalies_tws
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        src = str(tmp_path / "sig_tws")
-        ck = str(tmp_path / "ck_tws")
-        out = str(tmp_path / "anom_tws")
-        step = np.concatenate([np.full(60, 1.0), np.full(60, 10.0)])
-        _write_batch(spark, src, {("m1", "a"): step})
-
-        def drain():
-            q = (
-                detect_anomalies_tws(
-                    stream_signals(spark, src), cp_permutations=30
-                )
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            return spark.read.schema(
-                "metric string, series string, kind string,"
-                " ts timestamp, value double"
-            ).parquet(out).collect()
-
-        first = drain()
-        cps1 = [r for r in first if r["kind"] == "changepoint"]
-        assert len(cps1) == 1
-        assert abs(int(cps1[0]["ts"].timestamp()) - (T0 + 60 * 15)) <= 3 * 15
-
-        _write_batch(
-            spark, src, {("m1", "a"): np.full(40, 10.0)}, t0=T0 + 120 * 15
-        )
-        second = drain()
-        cps2 = [r for r in second if r["kind"] == "changepoint"]
-        assert len(cps2) == 1
-        assert cps2[0]["ts"] == cps1[0]["ts"]
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
 
 
 def test_streaming_session_window(spark, tmp_path):

@@ -1,13 +1,16 @@
 """P8/A4/K1–K3 lagged cross-correlation (SURVEY.md §2.5/2.6/2.7)."""
 
 import numpy as np
+import pytest
+from pyspark.sql import functions as F
 
 from metrics_advisor_spark.operators import (
     bucket_correlation,
+    positional_correlation,
     rank_correlations,
 )
 from metrics_advisor_spark.operators.xcorr import best_lag
-from tests.conftest import make_signals_df
+from tests.conftest import epoch_dt, make_signals_df, pairwise_lagged_pearson
 
 T0 = 1640588307
 
@@ -49,15 +52,61 @@ def test_anticorrelation_ranked_by_abs(spark):
     assert top["corr"] < -0.99
 
 
-def test_lag0_matches_numpy_pearson(spark):
+def _pearson_cases():
+    """Two 40-sample windows, one objective, a lagged partner and an
+    unrelated candidate; NaN marks a missing sample, which reads as null
+    except in "obj_nan"."""
     rng = np.random.default_rng(5)
-    n = 40
+    n = 80
     a = rng.normal(0, 1, n)
-    b = 0.5 * a + rng.normal(0, 0.5, n)
-    objs, cands = _signals(spark, a, {"b": b})
-    got = bucket_correlation(objs, cands, tmin=T0, lag_max=0).first()["corr"]
-    want = np.corrcoef(a, b)[0, 1]
-    assert abs(got - want) < 1e-9
+    cands = {
+        "lagged": np.roll(a, 2) + rng.normal(0, 0.3, n),
+        "other": rng.normal(5, 2, n),
+    }
+    gap = dict(cands, lagged=cands["lagged"].copy())
+    gap["lagged"][45:54] = np.nan  # 9-sample gap inside window 1
+    obj_null = a.copy()
+    obj_null[10] = np.nan
+    return {
+        "gap_free": (a, cands),
+        "cand_gap": (a, gap),
+        "obj_null": (obj_null, cands),
+        "obj_nan": (obj_null, cands),
+    }
+
+
+PEARSON_CASES = _pearson_cases()
+LAGGED_OPERATORS = {
+    "bucket": lambda o, c: bucket_correlation(o, c, tmin=T0, lag_max=3),
+    "positional": lambda o, c: positional_correlation(
+        o, c, count_bucket=40, lag_max=3
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PEARSON_CASES))
+@pytest.mark.parametrize("op", sorted(LAGGED_OPERATORS))
+def test_matches_numpy_pairwise_pearson(spark, op, case):
+    """At every (window, candidate, lag), corr is Pearson's r of the
+    complete pairs and n_pairs counts only those.  On the gap-free grid
+    timestamp and positional alignment coincide."""
+    obj, cands = PEARSON_CASES[case]
+    objs, cand_df = _signals(spark, obj, cands)
+    if case == "obj_nan":  # a NaN sample, as prom-JSON "NaN" casts to
+        objs = objs.withColumn("value", F.coalesce("value", F.lit(float("nan"))))
+    got = {
+        (r["bucket_id"], r["cand_series"], r["lag"]): (r["corr"], r["n_pairs"])
+        for r in LAGGED_OPERATORS[op](objs, cand_df).collect()
+    }
+    want = {
+        (b, name, lag): v
+        for name, c in cands.items()
+        for (b, lag), v in pairwise_lagged_pearson(obj, c, 3).items()
+    }
+    assert set(got) == set(want)
+    for key, (corr, n_pairs) in want.items():
+        assert got[key][1] == n_pairs, key
+        assert abs(got[key][0] - corr) < 1e-9, key
 
 
 def test_same_bucket_truncation_vs_full_overlap(spark):
@@ -96,11 +145,25 @@ def _matrix_fixture(spark):
 def test_corr_matrix_blocked_equals_exact(spark):
     from metrics_advisor_spark.operators.xcorr import corr_matrix, corr_matrix_blocked
 
-    sig = _matrix_fixture(spark)
+    # one missing sample in m4: every pair with m4 loses that timestamp
+    missing = (F.col("metric") == "m4") & (F.col("ts") == epoch_dt(T0 + 15 * 50))
+    sig = _matrix_fixture(spark).withColumn(
+        "value", F.when(missing, None).otherwise(F.col("value"))
+    )
     exact = {
         (r["metric_a"], r["metric_b"]): r
         for r in corr_matrix(sig).collect()
     }
+
+    def values(metric):
+        rows = sig.filter(F.col("metric") == metric).orderBy("ts").collect()
+        return np.array([r["value"] for r in rows], dtype=float)
+
+    m2, m4 = values("m2"), values("m4")
+    ok = ~np.isnan(m2) & ~np.isnan(m4)
+    assert exact[("m2", "m4")]["n_pairs"] == ok.sum() == 119
+    want = np.corrcoef(m2[ok], m4[ok])[0, 1]
+    assert abs(exact[("m2", "m4")]["corr"] - want) < 1e-9
     blocked = {
         (r["metric_a"], r["metric_b"]): r
         for r in corr_matrix_blocked(sig, num_blocks=8).collect()

@@ -12,6 +12,11 @@ across engines.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -96,8 +101,20 @@ from metrics_advisor_spark.sources.signals import signals_from_events
 HOUR = 3600
 # a bucket wider than any dataset span → bucket_id 0 everywhere (global corr)
 GLOBAL_BUCKET = 10**12
-# per-process cache of the streaming file-source copy (one write per sf_dir)
 _STREAM_SRC_CACHE: dict[str, str] = {}
+
+
+def _stage_stream_src(key: str, build: Callable[[], DataFrame]) -> str:
+    """Stage an input table for a file-stream source: write `build()` as
+    a parquet dir once per process per `key` and return its path.  Only
+    the input table is kept, never a computed result; every query still
+    computes its answer from the staged rows on each invocation."""
+    src = _STREAM_SRC_CACHE.get(key)
+    if src is None:
+        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/src"
+        build().write.mode("overwrite").parquet(src)
+        _STREAM_SRC_CACHE[key] = src
+    return src
 
 
 def _fit_codebook(spark, emb: DataFrame, m: int, k: int):
@@ -881,7 +898,6 @@ def q_streaming_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Clock-aligned 600 s windows are exactly floor(epoch/600) grouping, so
     the streaming result is oracle-checkable like any batch query."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.streaming import (
@@ -890,11 +906,7 @@ def q_streaming_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_stats,
     )
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     name = f"stream_q_{uuid.uuid4().hex[:8]}"
     run_to_memory(
         windowed_stats(stream_signals(spark, src), bucket_seconds=600),
@@ -916,17 +928,12 @@ def q_streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     session windows → memory sink, availableNow drain, complete mode).
     session.end is last-event + gap by session_window semantics; the
     oracle mirrors that with max(ts) + gap."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.streaming import run_to_memory, stream_signals
     from metrics_advisor_spark.streaming.pipeline import session_stats_stream
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     name = f"stream_s_{uuid.uuid4().hex[:8]}"
     run_to_memory(
         session_stats_stream(stream_signals(spark, src), gap_seconds=1800),
@@ -2036,20 +2043,13 @@ def q_streaming_link_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     `streaming_dedup` discipline) — and the oracle is the batch twin:
     the q_html_links branch enumeration deduplicated in SQL minus the
     known set."""
-    import tempfile
-
     from metrics_advisor_spark.streaming.pipeline import (
         streaming_link_frontier,
     )
 
-    key = f"{sf_dir}#pages"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_pages_") + "/pages"
-        _link_fixture_pages(spark, sf_dir).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _STREAM_SRC_CACHE[key] = src
+    src = _stage_stream_src(
+        f"{sf_dir}#pages", lambda: _link_fixture_pages(spark, sf_dir)
+    )
     base = tempfile.mkdtemp(prefix="ma_linkfrontier_")
     stream = spark.readStream.schema(
         "doc_id long, url string, html string"
@@ -2180,8 +2180,6 @@ def q_streaming_perplexity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent (static model, no cross-batch state), so a drain in
     any batching equals the batch `char_lm_perplexity ≤ ceiling` —
     the SQL oracle (shared scoring CTE with `perplexity_gate`)."""
-    import tempfile
-
     from metrics_advisor_spark.streaming.pipeline import (
         streaming_perplexity_gate,
     )
@@ -2254,20 +2252,13 @@ def q_streaming_span_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline of the other 22 surfaces).  Replay idempotence under
     at-least-once foreachBatch is pinned by
     tests/test_round15_ops.py."""
-    import tempfile
-
     from metrics_advisor_spark.streaming.pipeline import (
         streaming_span_gate,
     )
 
-    key = f"{sf_dir}#spandocs"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_sdocs_") + "/docs"
-        _docs_span_dups(spark, sf_dir).write.mode("overwrite").parquet(
-            src
-        )
-        _STREAM_SRC_CACHE[key] = src
+    src = _stage_stream_src(
+        f"{sf_dir}#spandocs", lambda: _docs_span_dups(spark, sf_dir)
+    )
     base = tempfile.mkdtemp(prefix="ma_spangate_")
     stream = spark.readStream.schema("doc_id long, text string").parquet(
         src
@@ -3625,31 +3616,17 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_signals_src(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per sf_dir) the canonical signals table as a parquet
-    dir for file-source streaming queries; cached across queries."""
-    import tempfile
-
-    key = f"{sf_dir}#signals"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_sig_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[key] = src
-    return src
+    """The canonical signals table, staged for file-source streaming."""
+    return _stage_stream_src(
+        f"{sf_dir}#signals", lambda: _signals(spark, sf_dir)
+    )
 
 
 def _stream_docs_src(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per sf_dir) the planted-dup corpus as a parquet dir for
-    file-source streaming queries; cached across contract queries."""
-    import tempfile
-
-    key = f"{sf_dir}#docs"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_docs_") + "/docs"
-        _docs_with_dups(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[key] = src
-    return src
+    """The planted-dup corpus, staged for file-source streaming."""
+    return _stage_stream_src(
+        f"{sf_dir}#docs", lambda: _docs_with_dups(spark, sf_dir)
+    )
 
 
 def q_streaming_corpus_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3710,8 +3687,6 @@ def q_streaming_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppression.  A single availableNow drain admits exactly the docs
     where no lower-doc_id doc shares an LSH band, so the admitted
     doc_id set is batch-oracle-checkable like the other 13 surfaces."""
-    import tempfile
-
     from metrics_advisor_spark.streaming.pipeline import (
         streaming_neardup_gate,
     )
@@ -4563,17 +4538,12 @@ def q_streaming_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     state — two chained stateful aggregates in one streaming query is a
     documented Spark limitation, and the flag needs the FULL count
     distribution anyway."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.operators.trend import flag_bursts
     from metrics_advisor_spark.streaming import run_to_memory, stream_signals
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     counts = (
         stream_signals(spark, src)
         .withWatermark("ts", "2 hours")
@@ -4697,13 +4667,7 @@ def q_streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from metrics_advisor_spark.streaming import run_to_memory, stream_signals
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        import tempfile
-
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     tie = F.struct(F.col("ts"), F.col("value"))
     bars = (
         stream_signals(spark, src)
@@ -4932,20 +4896,15 @@ def q_streaming_cdc_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, complete-mode drain).  Same tiebreak as the batch
     `latest_by_key`, so the drained state shares the `cdc_latest`
     oracle."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.streaming import run_to_memory
     from metrics_advisor_spark.streaming.pipeline import latest_by_key_stream
 
-    key = sf_dir + "/events"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/ev"
-        spark.read.parquet(f"{sf_dir}/events.parquet").write.mode(
-            "overwrite"
-        ).parquet(src)
-        _STREAM_SRC_CACHE[key] = src
+    src = _stage_stream_src(
+        f"{sf_dir}#events",
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet"),
+    )
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     latest = latest_by_key_stream(stream)
@@ -5060,17 +5019,12 @@ def q_streaming_ksigma(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into a STATELESS stream-static join that flags samples
     beyond 3σ.  Append mode, no watermark, no streaming state at all;
     the drained output equals the same filter run batch (the oracle)."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.streaming import run_to_memory, stream_signals
     from metrics_advisor_spark.streaming.pipeline import streaming_ksigma
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     baseline = (
         _signals(spark, sf_dir)
         .groupBy("metric", "series")
@@ -5173,16 +5127,11 @@ def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping windows, state is per (metric, window), complete-mode
     drain.  The batch oracle explodes each event's two contributing
     window starts."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.streaming import run_to_memory, stream_signals
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     counts = (
         stream_signals(spark, src)
         .withWatermark("ts", "2 hours")
@@ -5403,16 +5352,11 @@ def q_streaming_weekly_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-arithmetic (dow, hour) key — stateless projection into
     bounded-cardinality state, no watermark needed; shares the batch
     weekly_profile oracle."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.streaming import run_to_memory, stream_signals
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     epoch = F.unix_timestamp("ts")
     day = F.floor(epoch / 86400)
     prof = (
@@ -5604,16 +5548,11 @@ def q_streaming_daily_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (metric, day) p50/p95/p99 SLA table maintained as a complete-mode
     exact-percentile aggregate (ObjectHashAggregate state, bounded
     (metric × day) keys); shares the batch daily_quantiles oracle."""
-    import tempfile
     import uuid
 
     from metrics_advisor_spark.streaming import run_to_memory, stream_signals
 
-    src = _STREAM_SRC_CACHE.get(sf_dir)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_src_") + "/sig"
-        _signals(spark, sf_dir).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[sf_dir] = src
+    src = _stream_signals_src(spark, sf_dir)
     q = (
         stream_signals(spark, src)
         .groupBy(
@@ -5784,19 +5723,12 @@ def q_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_plain_docs_src(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once per sf_dir) the PLAIN documents (doc_id, text) as a
-    parquet dir for file-source streaming queries."""
-    import tempfile
-
-    key = f"{sf_dir}#plaindocs"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_pdocs_") + "/docs"
-        _docs(spark, sf_dir).select("doc_id", "text").write.mode(
-            "overwrite"
-        ).parquet(src)
-        _STREAM_SRC_CACHE[key] = src
-    return src
+    """The PLAIN documents (doc_id, text), staged for file-source
+    streaming."""
+    return _stage_stream_src(
+        f"{sf_dir}#plaindocs",
+        lambda: _docs(spark, sf_dir).select("doc_id", "text"),
+    )
 
 
 def q_streaming_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5807,8 +5739,6 @@ def q_streaming_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent (static broadcast model, no cross-batch state), so a
     drain in any batching equals the batch `dsir_score ≥ threshold` —
     the SQL oracle."""
-    import tempfile
-
     from metrics_advisor_spark.functions.selection import dsir_model
     from metrics_advisor_spark.streaming.pipeline import (
         streaming_dsir_gate,
@@ -5968,7 +5898,11 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     amap = pq_encode(emb, coarse, m=1).select(
         "vec_id", F.col("code").alias("cell")
     ).persist()
-    fine = _fit_ivfpq_fine(spark, emb, coarse, amap, m=4, k_codes=16)
+    try:
+        fine = _fit_ivfpq_fine(spark, emb, coarse, amap, m=4, k_codes=16)
+    except BaseException:
+        amap.unpersist()
+        raise
     out = ivfpq_search(
         emb.filter(F.col("vec_id") < 5), emb,
         k_coarse=8, m=4, k_codes=16, nprobe=2, k=10,
@@ -6011,8 +5945,6 @@ def q_streaming_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     PCM framing, integer-exact features).  Stateless across batches, so
     a drain in any batching equals the batch `audio_windows` — the SQL
     oracle."""
-    import tempfile
-
     from metrics_advisor_spark.functions.multimodal import (
         attach_wav_payload,
     )
@@ -6020,14 +5952,10 @@ def q_streaming_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_audio_features,
     )
 
-    key = f"{sf_dir}#wav"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_wav_") + "/wav"
-        attach_wav_payload(_docs(spark, sf_dir, fanout=False)).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _STREAM_SRC_CACHE[key] = src
+    src = _stage_stream_src(
+        f"{sf_dir}#wav",
+        lambda: attach_wav_payload(_docs(spark, sf_dir, fanout=False)),
+    )
     base = tempfile.mkdtemp(prefix="ma_audiogate_")
     stream = spark.readStream.schema("doc_id long, wav binary").parquet(src)
     streaming_audio_features(stream, out_dir=f"{base}/out", window=160)
@@ -6199,8 +6127,6 @@ def q_streaming_video_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     motion (the dead-camera filter).  Stateless across batches, so a
     drain in any batching equals the batch meta+motion plan — the
     analytic SQL oracle."""
-    import tempfile
-
     from metrics_advisor_spark.functions.multimodal import (
         attach_avi_payload,
     )
@@ -6208,14 +6134,10 @@ def q_streaming_video_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_video_gate,
     )
 
-    key = f"{sf_dir}#avi"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_avi_") + "/avi"
-        attach_avi_payload(_docs(spark, sf_dir, fanout=False)).write.mode(
-            "overwrite"
-        ).parquet(src)
-        _STREAM_SRC_CACHE[key] = src
+    src = _stage_stream_src(
+        f"{sf_dir}#avi",
+        lambda: attach_avi_payload(_docs(spark, sf_dir, fanout=False)),
+    )
     base = tempfile.mkdtemp(prefix="ma_videogate_")
     stream = spark.readStream.schema("doc_id long, video binary").parquet(
         src
@@ -6241,21 +6163,17 @@ def q_streaming_warc_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     admitted on status 200.  Stateless across batches, so a drain in
     any batching equals the batch plan — the analytic oracle writes
     each admitted row straight from the synthesis rule."""
-    import tempfile
-
     from metrics_advisor_spark.sources.warc import attach_warc_payload
     from metrics_advisor_spark.streaming.pipeline import (
         streaming_warc_gate,
     )
 
-    key = f"{sf_dir}#warc"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_warc_") + "/warc"
-        attach_warc_payload(
+    src = _stage_stream_src(
+        f"{sf_dir}#warc",
+        lambda: attach_warc_payload(
             _docs(spark, sf_dir, fanout=False).select("doc_id", "text")
-        ).write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[key] = src
+        ),
+    )
     base = tempfile.mkdtemp(prefix="ma_warcgate_")
     stream = spark.readStream.schema("doc_id long, warc binary").parquet(
         src
@@ -6555,20 +6473,13 @@ def q_streaming_ann_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stateless across batches (broadcast codebook + static reference
     LUT), so a drain in any batching equals the batch encode/score
     plan — the SQL oracle composed from the shared PQ chain."""
-    import tempfile
-
     from metrics_advisor_spark.streaming.pipeline import (
         streaming_ann_gate,
     )
 
     emb = _emb(spark, sf_dir)
     cb = _fit_codebook(spark, emb, m=4, k=16)
-    key = f"{sf_dir}#emb"
-    src = _STREAM_SRC_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="ma_stream_emb_") + "/emb"
-        emb.write.mode("overwrite").parquet(src)
-        _STREAM_SRC_CACHE[key] = src
+    src = _stage_stream_src(f"{sf_dir}#emb", lambda: emb)
     base = tempfile.mkdtemp(prefix="ma_anngate_")
     stream = spark.readStream.schema(
         "vec_id long, embedding array<float>"
@@ -6601,399 +6512,36 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decode_image(small)
 
 
-CURRENT_ROUND = 15
 DRIVER_GATE = 50
-
-# Rotation state machine (VERDICT r04 item 5): the driver's correctness
-# gate checks only the FIRST `DRIVER_GATE` entries of `queries()` each
-# round.  `ROTATION` maps every contract query to the latest round whose
-# CORRECTNESS_r0N.json contains a row for it (None = never
-# driver-checked); `tests/test_rotation.py` rebuilds this mapping from
-# the committed CORRECTNESS files and asserts (a) it matches, (b) the
-# window is stalest-first (every never-checked query precedes every
-# checked one, modulo ROTATION_EXCEPTIONS), and (c) no checked query
-# outside the window is staler than CURRENT_ROUND - MAX_STALE_ROUNDS.
-# Update ROTATION + CURRENT_ROUND when a new CORRECTNESS file lands.
-ROTATION: dict[str, int | None] = {
-    "semdedup": 11,
-    "report_summary": 11,
-    "streaming_dedup": 11,
-    "dim_covariance": 12,
-    "flagship_positional": 11,
-    "containment_pairs": 11,
-    "snm_pairs": 11,
-    "streaming_neardup": 11,
-    "ks_drift": 11,
-    "streaming_sliding_counts": 11,
-    "conversion_latency": 11,
-    "rfm_segments": 11,
-    "vocab_overlap": 11,
-    "token_gini": 11,
-    "curriculum_plan": 11,
-    "acf_profile": 11,
-    "adamic_adar": 11,
-    "streaming_ksigma": 11,
-    "unigram_surprisal": 11,
-    "dup_ngram_fraction": 12,
-    "canonical_select": 12,
-    "theil_sen": 12,
-    "spearman_corr": 12,
-    "psi_drift": 12,
-    "skew_audit": 12,
-    "lang_confusion": 12,
-    "streaming_cdc_latest": 12,
-    "streaming_burst": 12,
-    "streaming_ohlc": 12,
-    "ab_test": 12,
-    "value_deciles": 12,
-    "lag_features": 12,
-    "winsorize": 12,
-    "transition_counts": 12,
-    "pmi_cooccurrence": 12,
-    "cms_estimate": 12,
-    "rolling_corr": 12,
-    "fk_violations": 12,
-    "table_profile": 12,
-    "pagerank": 12,
-    "attribution": 12,
-    "cross_source_dups": 12,
-    "source_token_quantiles": 12,
-    "robust_scale": 12,
-    "sliding_active_users": 12,
-    "typo_pairs": 12,
-    "burst_detect": 12,
-    "seasonal_strength": 12,
-    "ohlc": 12,
-    "twap": 12,
-    "interpolate": 12,
-    "changes": 12,
-    "deriv": 12,
-    "char_entropy": 12,
-    "kl_divergence": 12,
-    "bpe_pairs": 12,
-    "train_split": 13,
-    "triangle_count": 13,
-    "merge_upsert": 13,
-    "interval_merge": 13,
-    "bloom_contamination": 13,
-    "mixture_plan": 13,
-    "funnel": 13,
-    "cdc_latest": 13,
-    "scd2_history": 13,
-    "predict_linear": 13,
-    "resets": 13,
-    "global_shuffle": 13,
-    "shared_passages": 13,
-    "cross_source_neardup": 13,
-    "scrub_passages": 13,
-    "rollup_counts": 13,
-    "streaming_bucket_stats": 13,
-    "text_stats": 13,
-    "token_count": 13,
-    "lang_id": 13,
-    "doc_fingerprint": 13,
-    "exact_dedup": 13,
-    "jaccard_pairs": 13,
-    "minhash_signatures": 13,
-    "minhash_lsh_pairs": 13,
-    "media_meta": 10,
-    "media_frames": 9,
-    "ann_topk": 13,
-    "embedding_near_dup": 13,
-    "ivf_topk": 10,
-    "distinct_series": 13,
-    "series_stats": 13,
-    "valid_active_series": 13,
-    "time_extent": 13,
-    "bucket_agg": 13,
-    "bucket_membership": 13,
-    "resample_hourly": 14,
-    "moving_median": 14,
-    "ksigma_outliers": 14,
-    "relative_normalize": 14,
-    "xcorr_lagged": 14,
-    "xcorr_best_lag": 14,
-    "topk_correlated": 14,
-    "xcorr_bucketed": 14,
-    "corr_matrix": 14,
-    "detect_anomalies": 14,
-    "kmeans_outliers": 14,
-    "corr_matrix_blocked": 14,
-    "tpch_q1": 14,
-    "tpch_q2": 14,
-    "tpch_q3": 14,
-    "tpch_q4": 14,
-    "tpch_q5": 14,
-    "tpch_q6": 14,
-    "tpch_q7": 14,
-    "tpch_q8": 14,
-    "tpch_q9": 14,
-    "tpch_q10": 14,
-    "tpch_q11": 14,
-    "tpch_q12": 14,
-    "tpch_q13": 14,
-    "tpch_q14": 14,
-    "tpch_q15": 14,
-    "tpch_q16": 14,
-    "tpch_q17": 14,
-    "tpch_q18": 14,
-    "tpch_q19": 14,
-    "tpch_q20": 14,
-    "tpch_q21": 14,
-    "tpch_q22": 14,
-    "lateral_topk_per_nation": 14,
-    "ntile_price_quartiles": 14,
-    "grouping_sets_orders": 9,
-    "pivot_status_by_priority": 9,
-    "join_revenue_by_nation": 9,
-    "window_running_sum": 9,
-    "fill_forward": 9,
-    "session_stats": 9,
-    "asof_join": 9,
-    "series_set_ops": 9,
-    "metric_quantiles": 9,
-    "dedup_materialize": 9,
-    "dup_cluster_sizes": 9,
-    "irate": 9,
-    "histogram_quantile": 9,
-    "weighted_sample": 9,
-    "sequence_packing": 9,
-    "simhash": 9,
-    "srp_buckets": 9,
-    "knn_graph": 9,
-    "tfidf_top_terms": 9,
-    "bm25_search": 9,
-    "pii_scrub": 9,
-    "contamination": 9,
-    "line_dedup": 9,
-    "counter_rate": 9,
-    "embedding_centroids": 9,
-    "streaming_corpus_gate": 9,
-    "streaming_session_stats": 9,
-    "rolling_time_avg": 9,
-    "value_histogram": 9,
-    "hll_distinct": 9,
-    "cube_counts": 9,
-    "percent_rank_orders": 9,
-    "series_regression": 9,
-    "mad_outliers": 9,
-    "ewma_smooth": 9,
-    "incident_range_join": 9,
-    "hamming_pairs_blocked": 10,
-    "corpus_prep": 10,
-    "token_budget_sample": 10,
-    "ngram_repetition": 10,
-    "quality_flags": 10,
-    "stratified_sample": 10,
-    "knn_graph_blocked": 10,
-    "quantile_over_time": 10,
-    "gap_detect": 10,
-    "heavy_hitters": 10,
-    "text_normalize": 10,
-    "cohort_retention": 10,
-    "salted_join_revenue": 10,
-    "embedding_norms": 10,
-    "minhash_jaccard_est": 10,
-    "streaming_term_counts": 10,
-    "source_stats": 10,
-    "zipf_slope": 10,
-    "bucket_render": 10,
-    "series_outer_compare": 10,
-    "quantile_sketch_audit": 10,
-    "streaming_quantiles": 10,
-    "chunk_documents": 10,
-    "wow_change": 10,
-    "grid_completeness": 10,
-    "cohort_conversion": 10,
-    "period_detect": 10,
-    "max_drawdown": 10,
-    "peak_detect": 10,
-    "ecdf_sample": 10,
-    "holdout_leakage": 10,
-    "pii_density": 10,
-    "dedup_savings": 10,
-    "lsh_eval": 10,
-    "mann_kendall": 10,
-    "late_arrival_audit": 10,
-    "wide_metrics": 10,
-    "streaming_daily_quantiles": 10,
-    "seasonal_zscore": 10,
-    "anomaly_cooccurrence": 10,
-    "daily_quantiles": 11,
-    "term_burstiness": 11,
-    "session_summary": 11,
-    "quantile_align": 11,
-    "ltv_curve": 11,
-    "trimmed_mean": 11,
-    "freshness_audit": 11,
-    "join_size_estimate": 11,
-    "dist_overlap": 11,
-    "alert_episodes": 11,
-    "cuped_ab": 11,
-    "table_diff": 11,
-    "seasonal_decompose": 11,
-    "clustering_coeff": 11,
-    "event_throttle": 11,
-    "retention_curve": 11,
-    "tokenizer_fertility": 11,
-    "streaming_weekly_profile": 11,
-    "path_trigrams": 11,
-    "user_entropy": 11,
-    "weighted_median": 11,
-    "quantization_audit": 11,
-    "label_centroid_sim": 11,
-    "slo_burn": 11,
-    "rolling_level_shift": 11,
-    "bigram_surprisal": 11,
-    "rrf_fusion": 11,
-    "stickiness": 11,
-    "interevent_gaps": 11,
-    "weekly_profile": 11,
-    "benford_audit": 11,
-    "dsir_weights": 13,
-    "intradoc_repetition": 13,
-    "dup_cluster_purity": 13,
-    "dsir_resample": 13,
-    "streaming_dsir_gate": 13,
-    "pq_codebook_audit": 13,
-    "pq_codes": 13,
-    "pq_search": 13,
-    "ivfpq_search": 13,
-    "audio_meta": 10,
-    "audio_windows": 10,
-    "streaming_audio": 13,
-    "image_meta": 10,
-    "image_pixels": 10,
-    "image_tiles": 14,
-    "ann_recall": 10,
-    "packed_sequences": 14,
-    "streaming_ann_gate": 10,
-    "image_resize": 10,
-    "pq_reconstruction": 13,
-    "video_meta": 9,
-    "video_frames": 10,
-    "video_motion": 9,
-    "av_alignment": 9,
-    "streaming_video_gate": 9,
-    "frame_dhash": 9,
-    "phash_dedup": 9,
-    "bpe_merges": 9,
-    "bpe_vocab": 9,
-    "bpe_batched_merges": 11,
-    "simhash_dup_groups": 9,
-    "hamming_group_pairs": 9,
-    "hamming_components": 9,
-    "positional_xcorr": 12,  # new r12 — never driver-checked
-    "mp4_meta": 12,  # new r12 — never driver-checked
-    "gif_meta": 12,  # new r12 — never driver-checked
-    "gif_pixel_stats": 12,  # new r12 — never driver-checked
-    "mp3_meta": 12,  # new r12 — never driver-checked
-    "warc_extract": 12,  # new r12 — never driver-checked
-    "warc_text_extract": 12,  # new r12 — never driver-checked
-    "pdf_text_extract": 13,
-    "bpe_segment": 13,
-    "unigram_segment": 13,
-    "sitemap_frontier": 13,
-    "html_links": 13,
-    "zip_extract": 13,
-    "url_canonical": 12,  # new r12 — never driver-checked
-    "robots_gate": 12,  # new r12 — never driver-checked
-    "blocklist_hits": 12,  # new r12 — never driver-checked
-    "streaming_warc_gate": 12,  # new r12 — never driver-checked
-    "gif_frame_stats": 12,  # new r12 — never driver-checked
-    "duplicate_spans": 14,
-    "scrub_duplicate_spans": 14,
-    "char_lm_perplexity": 14,
-    "perplexity_gate": 14,
-    "frontier_schedule": 14,
-    "html_meta": 14,
-    "wet_extract": 14,
-    "warc_cdx": 14,
-    "streaming_link_frontier": 14,
-    "crawl_waves": 14,
-    "dup_span_stats": 14,
-    "streaming_perplexity_gate": 14,
-    "scrub_spans_keep_first": None,  # new r15
-    "duplicate_span_sources": None,  # new r15
-    "streaming_span_gate": None,  # new r15
-    "audio_fingerprint": None,  # new r15
-    "sitemap_discovery": None,  # new r15
-    "audio_dup_components": None,  # new r15
-    "image_dup_components": None,  # new r15
-}
-
-# Round 12: EMPTY by arithmetic necessity again (VERDICT r11 item 1).
-# After folding CORRECTNESS_r11 the stamp distribution is r05×30,
-# r06×46, r07×44, r09×48, r10×50, r11×50; the r12 window is forced to
-# the never-checked newcomers plus the 30 r05 stamps plus the stalest
-# r06 stamps — zero slack for deliberate re-queues.  Any r12 code
-# change that would normally demand a re-queue must instead be
-# attested by the builder's own driver_sim run
-# (scripts/driver_sim.py), recorded in ROUND_NOTES.md, and queued for
-# the r13 window.
-ROTATION_EXCEPTIONS: set[str] = set()
-
-# With a 50-slot gate, a full rotation takes ceil(surface/50) rounds;
-# queries beyond the window may be at most this many rounds stale
-# before the ordering itself is a bug.  (The r04 verdict's "no row
-# older than 2 rounds" aspiration is infeasible at this
-# surface-to-gate ratio — ceil(surface/50) is the structural floor.
-# Raised honestly from 5 to 6 in r11 when `bpe_batched_merges` pushed
-# the surface past 5x50, and from 6 to 7 in r15 when gating the four
-# staged span/audio newcomers pushed the surface past 6x50 = 300
-# (ceil(302/50) = 7) — exactly the decision VERDICT r14 item 1 forced
-# ("hold the line or raise to 7 honestly when the surface crosses
-# 300"); the builder-side parity suite + driver_sim cover every query
-# every round in between.)
-MAX_STALE_ROUNDS = 7
 
 
 def _rotation_order(base: dict) -> dict:
-    """Impose the driver-window order MECHANICALLY from ROTATION
-    (round-5 lesson: hand-reordering the 235-entry literal every round
-    is exactly how the r04 rotation stalled).  Never-driver-checked
-    queries first (registry order), then ROTATION_EXCEPTIONS (checked
-    queries deliberately re-queued for the next window), then checked
-    queries stalest-first (stable on registry order within a round
-    block).  tests/test_rotation.py asserts the invariants."""
-    idx = {n: i for i, n in enumerate(base)}
-    never = [n for n in base if ROTATION[n] is None]
-    exc = [
-        n for n in base
-        if ROTATION[n] is not None and n in ROTATION_EXCEPTIONS
-    ]
-    checked = sorted(
-        (
-            n for n in base
-            if ROTATION[n] is not None and n not in ROTATION_EXCEPTIONS
-        ),
-        key=lambda n: (ROTATION[n], idx[n]),
-    )
-    return {n: base[n] for n in (*never, *exc, *checked)}
+    """The driver checks only the first DRIVER_GATE entries, so order
+    the registry stalest-first: by the newest committed
+    CORRECTNESS_r<NN>.json next to this file that holds each name (0 =
+    never checked), then by registry position (a stable sort)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for name in json.load(f):
+                last[name] = max(last.get(name, 0), rnd)
+    return {n: base[n] for n in sorted(base, key=lambda n: last.get(n, 0))}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver checks only the first DRIVER_GATE (50)
-    # entries.  The order is DERIVED by _rotation_order() from ROTATION
-    # (stalest-first; never-checked lead), so the registry dict below
-    # can stay append-only — add new queries anywhere, update ROTATION
-    # when a CORRECTNESS artifact lands, and the window takes care of
-    # itself.  Machine-checked by tests/test_rotation.py.
+    # Append-only registry: _rotation_order() derives the driver-window
+    # order from the committed CORRECTNESS files (tests/test_rotation.py).
     return _rotation_order({
-        # ---- round-5 driver window (first 50 = stalest-first; see
-        # ROTATION below) ----
-        # (1) round-3-mandated trio, never driver-checked (r04 positions
-        # 103-105)
         "semdedup": q_semdedup,
         "report_summary": q_report_summary,
         "streaming_dedup": q_streaming_dedup,
-        "dim_covariance": q_dim_covariance,  # r04 red; determinism fixed r05
+        "dim_covariance": q_dim_covariance,
         "flagship_positional": q_flagship_positional,
         "containment_pairs": q_containment_pairs,
         "snm_pairs": q_snm_pairs,
         "streaming_neardup": q_streaming_neardup,
-        # (2) remainder of the never-driver-checked backlog, oldest
-        # blocks first (r04 4g-4a order preserved)
         "ks_drift": q_ks_drift,
         "streaming_sliding_counts": q_streaming_sliding_counts,
         "conversion_latency": q_conversion_latency,
@@ -7036,9 +6584,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "seasonal_strength": q_seasonal_strength,
         "ohlc": q_ohlc,
         "twap": q_twap,
-        # ---- driver cap (50) lands here ----
-        # leftover never-checked (backlog exceeds one 50-slot window by
-        # these 18; they lead the round-6 window)
         "interpolate": q_interpolate,
         "changes": q_changes,
         "deriv": q_deriv,
@@ -7057,12 +6602,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "predict_linear": q_predict_linear,
         "resets": q_resets,
         "global_shuffle": q_global_shuffle,
-        # new round-5 surfaces (never-checked; queue behind the
-        # leftover backlog so the mandated re-checks go first)
         "shared_passages": q_shared_passages,
         "cross_source_neardup": q_cross_source_neardup,
         "scrub_passages": q_scrub_passages,
-        # stalest driver rows next: r01-green block
         "rollup_counts": q_rollup_counts,
         "streaming_bucket_stats": q_streaming_bucket_stats,
         "text_stats": q_text_stats,
@@ -7090,7 +6632,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "robots_gate": q_robots_gate,
         "blocklist_hits": q_blocklist_hits,
         "streaming_warc_gate": q_streaming_warc_gate,
-        # ---- round-14 newcomers (the staged r13 surface, hash-gated)
         "duplicate_spans": q_duplicate_spans,
         "scrub_duplicate_spans": q_scrub_duplicate_spans,
         "char_lm_perplexity": q_char_lm_perplexity,
@@ -7116,7 +6657,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_near_dup": q_embedding_near_dup,
         "ivf_topk": q_ivf_topk,
         "distinct_series": q_distinct_series,
-        # r02-green block
         "series_stats": q_series_stats,
         "valid_active_series": q_valid_active_series,
         "time_extent": q_time_extent,
@@ -7168,7 +6708,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_join": q_asof_join,
         "series_set_ops": q_series_set_ops,
         "metric_quantiles": q_metric_quantiles,
-        # r03-green block
         "dedup_materialize": q_dedup_materialize,
         "dup_cluster_sizes": q_dup_cluster_sizes,
         "irate": q_irate,
@@ -7219,7 +6758,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quantile_sketch_audit": q_quantile_sketch_audit,
         "streaming_quantiles": q_streaming_quantiles,
         "chunk_documents": q_chunk_documents,
-        # r04-green block (freshest; rotates last)
         "wow_change": q_wow_change,
         "grid_completeness": q_grid_completeness,
         "cohort_conversion": q_cohort_conversion,
@@ -7268,7 +6806,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interevent_gaps": q_interevent_gaps,
         "weekly_profile": q_weekly_profile,
         "benford_audit": q_benford_audit,
-        # round-6 surfaces
         "dsir_weights": q_dsir_weights,
         "intradoc_repetition": q_intradoc_repetition,
         "dup_cluster_purity": q_dup_cluster_purity,
@@ -7282,7 +6819,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "audio_windows": q_audio_windows,
         "streaming_audio": q_streaming_audio,
         "pq_reconstruction": q_pq_reconstruction,
-        # ---- round-7 additions: real BMP image codec path ----
         "image_meta": q_image_meta,
         "image_pixels": q_image_pixels,
         "image_tiles": q_image_tiles,
@@ -7290,7 +6826,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "packed_sequences": q_packed_sequences,
         "streaming_ann_gate": q_streaming_ann_gate,
         "image_resize": q_image_resize,
-        # ---- round-8 additions: real AVI video codec path ----
         "video_meta": q_video_meta,
         "video_frames": q_video_frames,
         "video_motion": q_video_motion,

@@ -706,12 +706,12 @@ def simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     # TOKEN_RE is interpolated into a single-quoted SQL literal below;
     # the filter uses F.lit(TOKEN_RE).  A quote or backslash in a future
     # pattern would be mangled by SQL literal escaping and silently
-    # diverge from the lit() path — refuse rather than diverge
-    # (ADVICE r15).
-    assert "'" not in TOKEN_RE and "\\" not in TOKEN_RE, (
-        "simhash: TOKEN_RE must stay SQL-literal-safe (no quotes or "
-        "backslashes) — or build the fold from Column APIs"
-    )
+    # diverge from the lit() path — refuse rather than diverge.
+    if "'" in TOKEN_RE or "\\" in TOKEN_RE:
+        raise ValueError(
+            "simhash: TOKEN_RE must stay SQL-literal-safe (no quotes or "
+            "backslashes) — or build the fold from Column APIs"
+        )
     # one SQL expression per row: token-hash array -> 56 vote sums ->
     # fingerprint.  (s, i) index lambdas keep the tree size constant;
     # shiftleft/shiftright with a column bit count need the SQL form.

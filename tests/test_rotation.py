@@ -1,9 +1,8 @@
-"""Rotation state machine (VERDICT r04 item 5): the driver's
-correctness gate only checks the first DRIVER_GATE entries of
-queries(), so query ORDER is load-bearing.  These tests rebuild the
-last-driver-round mapping from the committed CORRECTNESS_r0N.json
-artifacts and fail if the declared ROTATION drifts from reality or the
-ordering stops being stalest-first.
+"""Rotation: the driver's correctness gate only checks the first
+DRIVER_GATE entries of queries(), so query ORDER is load-bearing.  These
+tests rebuild the last-driver-round mapping from the committed
+CORRECTNESS_r<NN>.json artifacts on their own and fail if the ordering
+stops being stalest-first or the window stops moving.
 
 No Spark session needed — pure structural checks, so they run on every
 pytest invocation at zero cost.
@@ -17,87 +16,67 @@ import re
 import __spark_entry__ as em
 
 REPO = os.path.dirname(os.path.abspath(em.__file__))
+# a query outside the next two windows may be at most this many rounds
+# past its last driver check (ceil(305 / 50) = 7 rounds per rotation)
+MAX_STALE_ROUNDS = 7
+
+
+def _artifacts():
+    """(round, set of query names) for every committed artifact."""
+    out = []
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            out.append((rnd, set(json.load(f))))
+    return sorted(out, key=lambda a: a[0])
 
 
 def _driver_rows():
-    # ROTATION encodes the state the CURRENT round's window was chosen
-    # from, i.e. artifacts of rounds < CURRENT_ROUND.  The current
-    # round's own CORRECTNESS file lands at round END (before the next
-    # builder session updates ROTATION), so it must not fail this test.
     last = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
-        if rnd >= em.CURRENT_ROUND:
-            continue
-        for name in json.load(open(path)):
+    for rnd, names in _artifacts():
+        for name in names:
             last[name] = max(last.get(name, 0), rnd)
     return last
 
 
-def test_rotation_matches_correctness_artifacts():
+def test_window_is_stalest_first():
     last = _driver_rows()
     order = list(em.queries())
-    assert set(em.ROTATION) == set(order), (
-        "ROTATION keys != queries() keys: "
-        f"only-rotation={sorted(set(em.ROTATION) - set(order))[:5]} "
-        f"only-queries={sorted(set(order) - set(em.ROTATION))[:5]}"
-    )
-    for name in order:
-        expect = last.get(name)
-        assert em.ROTATION[name] == expect, (
-            f"ROTATION[{name!r}] = {em.ROTATION[name]} but the committed "
-            f"CORRECTNESS artifacts say {expect}; update ROTATION (and "
-            f"CURRENT_ROUND) when a new CORRECTNESS file lands"
+    rounds = [last.get(q, 0) for q in order]
+    for i in range(1, len(order)):
+        assert rounds[i - 1] <= rounds[i], (
+            f"{order[i]!r} (last round {rounds[i]}) queued after "
+            f"{order[i - 1]!r} (last round {rounds[i - 1]}) — stale rows "
+            f"must rotate first"
         )
 
 
-def test_window_is_stalest_first():
+def test_window_moves_past_newest_artifact():
+    last = _driver_rows()
     order = list(em.queries())
-    window = set(order[: em.DRIVER_GATE])
-    # every deliberately re-queued checked query must be declared
-    assert em.ROTATION_EXCEPTIONS <= window
-    # no checked query (outside the declared exceptions) may sit in the
-    # window while a never-checked query waits outside it
-    never = [q for q in order if em.ROTATION[q] is None]
-    sneaked = [
-        q
-        for q in order[: em.DRIVER_GATE]
-        if em.ROTATION[q] is not None and q not in em.ROTATION_EXCEPTIONS
-    ]
-    waiting = [q for q in never if q not in window]
-    assert not (sneaked and waiting), (
-        f"checked queries {sneaked[:5]} occupy window slots while "
-        f"never-checked {waiting[:5]} wait outside — rotation stalled "
-        f"(the r04 failure mode: new blocks prepended all round)"
+    newest_round, newest = _artifacts()[-1]
+    older = [q for q in order if last.get(q, 0) < newest_round]
+    # only when fewer than DRIVER_GATE queries are older may the window
+    # take the newest round's queries again, to fill its free slots
+    slack = max(0, em.DRIVER_GATE - len(older))
+    again = newest & set(order[: em.DRIVER_GATE])
+    assert len(again) <= slack, (
+        f"{sorted(again)[:5]} were checked in round {newest_round} and "
+        f"sit in the next window again while older queries wait"
     )
-    # beyond the window, never-checked queries must come first, then
-    # checked blocks in non-decreasing last-round order
-    tail = order[em.DRIVER_GATE:]
-    seen_round = 0
-    for q in tail:
-        r = em.ROTATION[q]
-        if r is None:
-            assert seen_round == 0, (
-                f"never-checked {q!r} queued AFTER checked queries — it "
-                f"would rotate in later than fresher rows"
-            )
-        else:
-            assert r >= seen_round, (
-                f"{q!r} (last round {r}) queued after a fresher query "
-                f"(round {seen_round}) — stale rows must rotate first"
-            )
-            seen_round = max(seen_round, r)
 
 
 def test_no_query_exceeds_max_staleness():
+    last = _driver_rows()
+    current = _artifacts()[-1][0] + 1
     order = list(em.queries())
     reachable = set(order[: em.DRIVER_GATE * 2])
     for q in order:
-        r = em.ROTATION[q]
+        r = last.get(q)
         if r is None:
             continue
-        age = em.CURRENT_ROUND - r
-        assert age <= em.MAX_STALE_ROUNDS or q in reachable, (
+        age = current - r
+        assert age <= MAX_STALE_ROUNDS or q in reachable, (
             f"{q!r} last driver-checked round {r} (age {age} rounds) and "
             f"not within the next two windows — rotation is stalled"
         )

@@ -110,6 +110,21 @@ def test_ivfpq_injected_fine_not_attached_or_persisted(spark):
         assert f is not fine and f is not coarse and f is not amap
 
 
+def test_ivfpq_search_releases_amap_when_fine_fit_fails(spark, monkeypatch):
+    """The coarse assignment map is persisted before the fine fit; a
+    failing fit must not leave it in the session's cache."""
+    import __spark_entry__ as em
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("fine fit failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(em, "_fit_ivfpq_fine", fail)
+    with pytest.raises(RuntimeError, match="fine fit failed"):
+        em.q_ivfpq_search(spark, SF)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_ivf_topk_rejects_coarse_with_kmeans(spark):
     import __spark_entry__ as em
     from metrics_advisor_spark.functions.similarity import ivf_topk

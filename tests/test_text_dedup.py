@@ -75,6 +75,15 @@ def test_simhash_hamming(docs):
     assert pairs[(0, 2)] < pairs[(0, 4)]  # near dup closer than unrelated
 
 
+def test_simhash_rejects_sql_unsafe_token_re(docs, monkeypatch):
+    # the guard is a raise, not an assert, so it holds under python -O
+    from metrics_advisor_spark.functions import text
+
+    monkeypatch.setattr(text, "TOKEN_RE", "[a-z']+")
+    with pytest.raises(ValueError, match="SQL-literal-safe"):
+        simhash(docs)
+
+
 def test_token_count(docs):
     got = {r["doc_id"]: r["n_tokens"] for r in token_count(docs).collect()}
     assert got[0] == 14  # 14 words, no punctuation

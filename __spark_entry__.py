@@ -118,40 +118,20 @@ def _stage_stream_src(key: str, build: Callable[[], DataFrame]) -> str:
 
 
 def _fit_codebook(spark, emb: DataFrame, m: int, k: int):
-    """Fit the deterministic PQ codebook and inject it as a 4-column
-    (s, code, centroid, n_assigned) VALUES LocalRelation — fit ONCE
-    PER QUERY INVOCATION, inside the timed region.
-
-    r16: RETIRED the r11 per-(session, sf_dir) memo (`_PQ_CB_CACHE`),
-    which served fitted values across bench invocations and was
-    deliberately immune to the bench's between-query clearCache() —
-    cross-invocation precomputation keyed on the test data directory,
-    the exact shape the gaming rule names (r15 VERDICT watch item #4).
-    Every invocation now pays its own fit from the parquet inputs.
-    The LocalRelation injection itself stays: it is plan hygiene, not
-    caching — a tiny literal relation that broadcasts trivially and
-    lets the SAME invocation's several codebook consumers share one
-    fit instead of re-running the corpus fit per consumer subtree.
-    Values are bit-identical to the fit (ints verbatim, doubles via
-    repr round-trip, n_assigned with an L suffix to stay bigint)."""
-    from metrics_advisor_spark.functions.pq import pq_codebook
-
-    rows = pq_codebook(emb, m=m, k=k).collect()
-    if not rows:
-        raise ValueError("_fit_codebook: empty codebook fit")
-    vals = ",".join(
-        "({},{},array({}),{}L)".format(
-            r["s"],
-            r["code"],
-            ",".join(repr(float(x)) + "D" for x in r["centroid"]),
-            int(r["n_assigned"]),
-        )
-        for r in sorted(rows, key=lambda r: (r["s"], r["code"]))
+    """Fit the deterministic PQ codebook inside this invocation and
+    inject it as a 4-column (s, code, centroid, n_assigned) VALUES
+    LocalRelation (`pq._values_codebook`): one fit, shared by this
+    invocation's several codebook consumers instead of re-run per
+    consumer subtree.  Values are bit-identical to the fit."""
+    from metrics_advisor_spark.functions.pq import (
+        _values_codebook,
+        pq_codebook,
     )
-    return spark.sql(
-        f"SELECT s, code, centroid, n_assigned FROM (VALUES {vals})"
-        " AS t(s, code, centroid, n_assigned)"
-    )
+
+    rows = pq_codebook(emb, m=m, k=k).select(
+        "s", "code", "centroid", "n_assigned"
+    ).collect()
+    return _values_codebook(spark, rows)
 
 
 def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2624,11 +2604,9 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: seeded deterministic coarse quantizer (the ivfpq_search
     m=1 codebook — no RNG) + probed exact cosine re-rank.  n_probe <
     n_lists so the oracle genuinely checks the IVF pruning, not a
-    degenerate full scan.  Hash-oracled since r08 (r07 verdict item 4:
-    the MLlib-KMeans quantizer was engine-specific → rows-only).
-    The quantizer is fit inside this invocation and injected as a
-    LocalRelation (r16: the cross-invocation index cache is retired,
-    see `_fit_codebook`) — same (m=1, k=8) codebook `ivfpq_search`
+    degenerate full scan.  Hash-oracled since r08.  The quantizer is
+    fit once per invocation and injected as a LocalRelation
+    (`_fit_codebook`) — the same (m=1, k=8) codebook `ivfpq_search`
     probes."""
     from metrics_advisor_spark.functions.similarity import ivf_topk
 
@@ -5780,54 +5758,29 @@ def _fit_ivfpq_fine(
     spark, emb: DataFrame, coarse: DataFrame, amap: DataFrame,
     m: int, k_codes: int,
 ):
-    """IVF-PQ FINE (residual) codebook as a LocalRelation, fit ONCE
-    PER QUERY INVOCATION (r16: the per-(session, sf_dir) memo retired
-    with `_PQ_CB_CACHE` — see `_fit_codebook`).  Takes the caller's
-    coarse codebook and (persisted) assignment map so the corpus
-    coarse-encode pass is shared, not re-run.  Mirrors the residual
-    construction inside `pq._ivfpq_parts` exactly (double-cast vectors
-    − probed-cell centroid, then the deterministic seeded-Lloyd
-    `pq_codebook` on the residuals), so injected values are
-    bit-identical to the per-call fit it replaces."""
+    """IVF-PQ FINE (residual) codebook as a VALUES LocalRelation, fit
+    inside this invocation on `pq._residuals` — the same residual build
+    `pq._ivfpq_parts` fits on.  Takes the caller's coarse codebook and
+    (persisted) assignment map so the corpus coarse-encode pass is
+    shared, not re-run."""
     from metrics_advisor_spark.functions.pq import (
+        _residuals,
         _values_codebook,
         pq_codebook,
     )
 
-    cells = coarse.select(
-        F.col("code").alias("cell"), F.col("centroid").alias("ccent")
-    )
-    resid = (
-        emb.select(
-            F.col("vec_id"),
-            F.transform(
-                F.col("embedding"), lambda x: x.cast("double")
-            ).alias("v"),
-        )
-        .join(amap, "vec_id")
-        .join(F.broadcast(cells), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with(
-                "v", "ccent", lambda a, b: a - b
-            ).alias("residual"),
-        )
-    )
     rows = pq_codebook(
-        resid, m=m, k=k_codes, id_col="vec_id", vec_col="residual"
-    ).collect()
-    return _values_codebook(
-        spark, [(r["s"], r["code"], r["centroid"]) for r in rows]
-    )
+        _residuals(emb, coarse, amap),
+        m=m, k=k_codes, id_col="vec_id", vec_col="residual",
+    ).select("s", "code", "centroid").collect()
+    return _values_codebook(spark, rows)
 
 
 def _pq_parts(spark: SparkSession, sf_dir: str):
     """Shared PQ pipeline for the PQ contract queries: deterministic
     codebook (m=4, k=16) on the embeddings table, long-form codes.
-    The fit runs inside this invocation and is injected as a
-    LocalRelation (r16: the per-(session, sf_dir) cache is retired,
-    see `_fit_codebook`; values bit-identical to the fit)."""
+    The codebook is fit once per invocation (`_fit_codebook`) and
+    shared by the codes and the query's other consumers."""
     from metrics_advisor_spark.functions.pq import pq_encode
 
     emb = _emb(spark, sf_dir)
@@ -5875,11 +5828,9 @@ def q_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ADC top-10 (queries = vec_id < 5): deterministic coarse
     quantizer (8 cells) + residual PQ (m=4, k=16), probing the 2
     nearest cells per query — the standard corpus-scale ANN layout,
-    fully oracle-composed.  Both quantizers are fit inside this
-    invocation (r16: the cross-invocation index cache is retired —
-    see `_fit_codebook`); the fits are injected as LocalRelations so
-    the search consumes them as the pre-trained values they are,
-    without re-running the fit per consumer subtree."""
+    fully oracle-composed.  Both quantizers are fit once per
+    invocation and injected as LocalRelations (`_fit_codebook`,
+    `_fit_ivfpq_fine`), shared by the search's consumers."""
     from metrics_advisor_spark.functions.cacheutil import attach_cached
     from metrics_advisor_spark.functions.pq import (
         ivfpq_search,

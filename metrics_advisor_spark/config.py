@@ -8,7 +8,7 @@ the correlation lag budget (:192).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -50,7 +50,6 @@ class AdvisorConfig:
 
     # --- ranking (K2/K3; reference :209, templates/report.tpl:26) ---
     top_k_report: int = 3
-    top_k_plot: int = 5
 
     # --- parity flags (SURVEY.md §2.9) ---
     # positional=True reproduces the reference's positional window slicing
@@ -59,8 +58,6 @@ class AdvisorConfig:
     # cp_only=True reproduces Q1 (only change points populate anomaly
     # timestamps, metrics_advisor.py:155); False also buckets outliers.
     cp_only_anomaly_ts: bool = True
-
-    extra: dict = field(default_factory=dict, compare=False)
 
     @property
     def bucket_seconds(self) -> int:

@@ -445,23 +445,12 @@ def _ivfpq_parts(
             .select("vec_id", F.col("code").alias("cell"))
             .persist()
         )
-    vec_d = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    # persisted: the residual table feeds BOTH the fine-codebook fit
-    # (which scans it twice: seed ranking + assignment) and the encode
-    # pass — without the cache the whole coarse chain re-executes per
-    # consumer (measured 7.8 → ~4 s at sf0.1)
-    resid = (
-        vec_d.join(amap, "vec_id")
-        .join(F.broadcast(cells), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with("v", "ccent", lambda a, b: a - b).alias("residual"),
-        )
-    )
+    # persisted below when the fine codebook is fit here: the residual
+    # table feeds BOTH the fine-codebook fit (which scans it twice: seed
+    # ranking + assignment) and the encode pass — without the cache the
+    # whole coarse chain re-executes per consumer (measured 7.8 → ~4 s
+    # at sf0.1)
+    resid = _residuals(emb, coarse, amap, id_col, vec_col)
     if fine is not None:
         # PRE-TRAINED fine codebook injected (an IVF-PQ index is fit
         # once, not per search): resid then feeds only the single
@@ -503,10 +492,7 @@ def _ivfpq_parts(
         pq_cb_frames = (pq_cb,)
         pq_cb = _values_codebook(
             queries.sparkSession,
-            [
-                (r.s, r.code, r.centroid)
-                for r in pq_cb.select("s", "code", "centroid").collect()
-            ],
+            pq_cb.select("s", "code", "centroid").collect(),
         )
     codes = pq_encode(
         resid, pq_cb, m=m, id_col="vec_id", vec_col="residual"
@@ -588,7 +574,6 @@ def ivfpq_search(
     coarse: DataFrame | None = None,
     amap: DataFrame | None = None,
     fine: DataFrame | None = None,
-    eager: bool = False,
 ) -> DataFrame:
     """Public IVF-PQ top-k: `_ivfpq_parts` (the index + per-query ADC
     partials) followed by the shared `_adc_rank` tail.  See
@@ -597,30 +582,56 @@ def ivfpq_search(
         queries, emb, k_coarse=k_coarse, m=m, k_codes=k_codes,
         nprobe=nprobe, k=k, id_col=id_col, vec_col=vec_col,
         seed_sample_mod=seed_sample_mod, n_buckets=n_buckets,
-        coarse=coarse, amap=amap, fine=fine, eager=eager,
+        coarse=coarse, amap=amap, fine=fine,
     )
     return attach_cached(_adc_rank(parts, k), *frames)
 
 
+def _residuals(
+    emb: DataFrame,
+    coarse: DataFrame,
+    amap: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(vec_id, cell, residual): each vector, cast to double, minus the
+    centroid of its assigned coarse cell — the input the IVF-PQ fine
+    codebook is trained on and encodes.  ``coarse`` is the
+    (s, code, centroid) coarse codebook, ``amap`` the (vec_id, cell)
+    assignment."""
+    cells = coarse.select(
+        F.col("code").alias("cell"), F.col("centroid").alias("ccent")
+    )
+    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    return (
+        emb.select(F.col(id_col).alias("vec_id"), v.alias("v"))
+        .join(amap, "vec_id")
+        .join(F.broadcast(cells), "cell")
+        .select(
+            "vec_id",
+            "cell",
+            F.zip_with("v", "ccent", lambda a, b: a - b).alias("residual"),
+        )
+    )
+
 
 def _values_codebook(spark, rows):
-    """(s, code, centroid) rows -> a TRUE LocalRelation via a parsed
-    VALUES clause.  PySpark's createDataFrame builds a
-    PythonRDD-backed plan whose canonical form embeds the RDD id, so
-    identical data would NEVER cache-match across calls (measured:
-    it silently disabled every downstream cache reuse in the audit);
-    a VALUES literal parses to a LocalRelation that canonicalizes by
-    value, so repeated audits of the same corpus keep matching.
-    Doubles are emitted via repr() — the shortest round-trip form —
-    and parse back to the identical IEEE-754 double.  Rows are sorted
-    (s, code) so the emitted plan is deterministic regardless of
+    """(s, code, centroid[, n_assigned]) rows -> a LocalRelation via a
+    parsed VALUES clause — the one rendering of a fitted codebook as a
+    literal.  A fit runs once per invocation and several consumers of
+    that invocation (encode, LUTs, audits) read it: as a leaf literal it
+    is analyzed once and broadcasts without an exchange job, instead of
+    each consumer re-planning the whole Lloyd fold tree.  Doubles are
+    emitted via repr() — the shortest round-trip form — and parse back
+    to the identical IEEE-754 double; ``n_assigned`` (when the rows
+    carry it) is emitted with an L suffix to stay bigint.  Rows are
+    sorted (s, code) so the emitted plan is deterministic regardless of
     collect order.
 
-    ADVICE r10: an empty row list would render 'FROM (VALUES )' and
-    surface as an opaque ParseException, and non-finite centroid
-    values would emit invalid SQL ('nanD') — both are caller bugs
-    (empty corpus / degenerate fit), so fail with a descriptive error
-    instead."""
+    An empty row list would render 'FROM (VALUES )' and surface as an
+    opaque ParseException, and non-finite centroid values would emit
+    invalid SQL ('nanD') — both are caller bugs (empty corpus /
+    degenerate fit), so fail with a descriptive error instead."""
     rows = list(rows)
     if not rows:
         raise ValueError(
@@ -637,58 +648,18 @@ def _values_codebook(spark, rows):
                 f"(s={r[0]}, code={r[1]}) — degenerate codebook fit "
                 "(empty cell or non-finite input vectors)"
             )
+    counted = len(rows[0]) > 3
+
+    def literal(r):
+        vec = ",".join(repr(float(x)) + "D" for x in r[2])
+        n = f",{int(r[3])}L" if counted else ""
+        return f"({r[0]},{r[1]},array({vec}){n})"
+
     vals = ",".join(
-        "({},{},array({}))".format(
-            r[0], r[1], ",".join(repr(float(x)) + "D" for x in r[2])
-        )
-        for r in sorted(rows, key=lambda r: (r[0], r[1]))
+        literal(r) for r in sorted(rows, key=lambda r: (r[0], r[1]))
     )
-    return spark.sql(
-        f"SELECT s, code, centroid FROM (VALUES {vals})"
-        " AS t(s, code, centroid)"
-    )
-
-
-# Prepared audit plans (see ann_recall_audit ``prepare``): building the
-# audit DataFrame costs ~3 s of driver-side Py4J/Catalyst work at ANY
-# data scale (the plan is O(operators), not O(rows)); repeated audits
-# of the same corpus — parameter sweeps, the bench's median-of-3 tier —
-# reuse the built plan.  Entries are per (session key, input semantic
-# hashes, params); a handful of audits per process, so unbounded by
-# design.
-_PREPARED_AUDITS: dict = {}
-
-
-def _session_key(spark) -> tuple:
-    """Stable session identity for prepared-plan caches.  ADVICE r10:
-    keying on id(jsparkSession) is unsound — CPython can reuse the
-    address after the old session is garbage-collected, handing a new
-    session cached DataFrames bound to a stopped one.  applicationId +
-    the JVM session's UUID never repeats across sessions."""
-    try:
-        uuid = spark._jsparkSession.sessionUUID()
-    except Exception:  # very old Spark: fall back to the object id
-        uuid = str(id(spark._jsparkSession))
-    return (spark.sparkContext.applicationId, uuid)
-
-
-def _repin_audit(eager_pins, passive_pins) -> None:
-    """Restore a prepared audit's persisted intermediates after a
-    `spark.catalog.clearCache()` (the bench does one between queries):
-    re-persist every frame, then re-run the eager counts in dependency
-    order — the same serial cache-population sequence the original
-    build used, so the final action never hits the concurrent-
-    recompute storm."""
-    from pyspark import StorageLevel
-
-    frames = list(passive_pins) + [f for f, _ in eager_pins]
-    cleared = [f for f in frames if f.storageLevel == StorageLevel.NONE]
-    if not cleared:
-        return
-    for f in cleared:
-        f.persist()
-    for f, _ in eager_pins:
-        f.count()
+    cols = "s, code, centroid" + (", n_assigned" if counted else "")
+    return spark.sql(f"SELECT {cols} FROM (VALUES {vals}) AS t({cols})")
 
 
 def ann_recall_audit(
@@ -701,7 +672,6 @@ def ann_recall_audit(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    prepare: bool = True,
 ) -> DataFrame:
     """Recall@k of the PQ ADC and IVF-PQ search paths against exact
     Euclidean top-k — THE audit that justifies an (k_coarse, m,
@@ -719,38 +689,9 @@ def ann_recall_audit(
     never the full corpus; the approximate arms inherit their own
     scale paths.
 
-    ``prepare``: cache the fully-BUILT audit plan per (session, input
-    semantic hashes, params) and reuse it on repeat calls — the
-    DataFrame is immutable, so this is the prepared-statement
-    convention; construction is driver-side Catalyst/Py4J work that
-    does not shrink with data size.  A reused plan re-pins its
-    persisted intermediates if a cache clear dropped them."""
+    Every call builds and fits its own audit; nothing is kept between
+    calls."""
     from metrics_advisor_spark.functions.similarity import l2_topk
-
-    cache_key = None
-    if prepare:
-        cache_key = (
-            _session_key(emb.sparkSession),
-            emb._jdf.queryExecution().analyzed().semanticHash(),
-            queries._jdf.queryExecution().analyzed().semanticHash(),
-            k, k_coarse, m, k_codes, nprobe, id_col, vec_col,
-        )
-        hit = _PREPARED_AUDITS.get(cache_key)
-        if hit is not None:
-            out, eager_pins, passive_pins = hit
-            _repin_audit(eager_pins, passive_pins)
-            # re-ATTACH the frames (ADVICE r10): a prior
-            # release_cached() emptied the attachment list, so without
-            # this the re-persisted frames could never be released
-            # again (slow cache growth in long-lived sessions)
-            from metrics_advisor_spark.functions import cacheutil
-
-            setattr(
-                out,
-                cacheutil._ATTR,
-                list(passive_pins) + [f for f, _ in eager_pins],
-            )
-            return out
 
     # ONE corpus pass fits BOTH emb-side codebooks (flat m-subspace +
     # IVF whole-vector coarse) and ONE pass encodes both code layouts:
@@ -883,14 +824,7 @@ def ann_recall_audit(
             .alias("recall"),
         )
     )
-    out = attach_cached(out, sub, cbs, enc, exact, *ivf_frames)
-    if prepare:
-        # ivf_frames = (resid, fine-fit) — the fine fit is the eager
-        # middle pin (its count populates enc and resid serially)
-        eager_pins = [(cbs, True), (ivf_frames[-1], True), (exact, True)]
-        passive_pins = [sub, enc, ivf_frames[0]]
-        _PREPARED_AUDITS[cache_key] = (out, eager_pins, passive_pins)
-    return out
+    return attach_cached(out, sub, cbs, enc, exact, *ivf_frames)
 
 
 def pq_reconstruction_error(
@@ -972,8 +906,8 @@ def pq_reconstruction_error(
 # with the session; FAISS's actual operating model fits an index
 # OFFLINE, persists it, and every serving process loads it.  Codebooks
 # are KB-scale → parquet files that load back through the same
-# `_values_codebook` VALUES-LocalRelation path the in-session cache
-# uses (parquet stores IEEE-754 doubles exactly and the repr
+# `_values_codebook` VALUES-LocalRelation path a fresh fit uses
+# (parquet stores IEEE-754 doubles exactly and the repr
 # round-trip preserves them, so a loaded index is bit-identical to the
 # fit and search results hash-match across sessions).  The assignment
 # map (vec_id → coarse cell) is DATA-sized, so it stays a parquet scan

@@ -239,18 +239,10 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 7,
-    quantizer: str = "seeded",
     coarse: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: coarse quantizer + probed exact re-rank
     (the classic inverted-file ANN layout).
-
-    ``coarse`` (seeded mode only) injects a PRE-TRAINED
-    (s, code, centroid) quantizer — an IVF index is fit once and
-    searched many times, and the seeded fit is deterministic, so an
-    injected codebook with the same (corpus, n_lists) is
-    value-identical to the per-call fit it skips.
 
     Build: cluster the corpus into ``n_lists`` cells; the model is a
     tiny broadcast of n_lists×d centroids.  Search: each query scores
@@ -260,107 +252,69 @@ def ivf_topk(
     construction; raise n_probe toward n_lists to trade cost back for
     recall.
 
-    ``quantizer='seeded'`` (default) uses the deterministic seeded
-    one-step-Lloyd codebook from `functions/pq.pq_codebook` with m=1 —
-    the same coarse quantizer as `ivfpq_search`, no RNG, and therefore
-    fully oracle-expressible (r07 verdict item 4: this graduated the
-    contract query from rows-only to hash-exact).
-    ``quantizer='kmeans'`` keeps the MLlib KMeans fit (multi-iteration
-    Lloyd with sampled init — usually tighter cells, but seeded RNG
-    makes it engine-specific and only rows-checkable).
+    The quantizer is the deterministic seeded one-step-Lloyd codebook
+    from `functions/pq.pq_codebook` with m=1 — the same coarse
+    quantizer as `ivfpq_search`, no RNG, and therefore fully
+    oracle-expressible.  ``coarse`` injects a PRE-TRAINED
+    (s, code, centroid) quantizer instead — an IVF index is fit once
+    and searched many times, and the seeded fit is deterministic, so an
+    injected codebook with the same (corpus, n_lists) is
+    value-identical to the per-call fit it skips.  Cells with more
+    Lloyd steps come from `pq_codebook(m=1, iterations=N)` injected
+    here; the injection must hold exactly codes 0..n_lists−1.
     """
-    if quantizer != "seeded" and coarse is not None:
-        raise ValueError(
-            "ivf_topk: an injected coarse codebook requires "
-            "quantizer='seeded' (the kmeans path fits its own model "
-            "and would silently ignore it)"
-        )
-    if quantizer == "seeded":
-        from metrics_advisor_spark.functions.pq import (
-            _floor6,
-            _sq_dist,
-            pq_codebook,
-            pq_encode,
-        )
+    from metrics_advisor_spark.functions.pq import (
+        _floor6,
+        _sq_dist,
+        pq_codebook,
+        pq_encode,
+    )
 
-        if coarse is None:
-            coarse = pq_codebook(
-                corpus, m=1, k=n_lists, id_col=id_col, vec_col=vec_col
-            )
-        else:
-            # ADVICE r11: an injected codebook that disagrees with
-            # n_lists would silently change the cell count and pruning
-            # semantics while n_lists still looks authoritative in the
-            # call — validate the (KB-scale, usually LocalRelation)
-            # injection before using it, mirroring _ivfpq_parts'
-            # both-or-neither pairing check.
-            got = sorted(
-                (r["s"], r["code"])
-                for r in coarse.select("s", "code").collect()
-            )
-            want = [(0, c) for c in range(n_lists)]
-            if got != want:
-                raise ValueError(
-                    f"ivf_topk: injected coarse codebook has cells "
-                    f"{got[:8]}{'…' if len(got) > 8 else ''} but "
-                    f"n_lists={n_lists} demands exactly s=0, codes "
-                    f"0..{n_lists - 1} — stale or mismatched index "
-                    f"injection"
-                )
-        centers_df = coarse.select(
-            F.col("code").alias("cell"), "centroid"
-        )
-        assigned = (
-            pq_encode(corpus, coarse, m=1, id_col=id_col, vec_col=vec_col)
-            .select("vec_id", F.col("code").alias("cell"))
-            .join(
-                corpus.select(
-                    F.col(id_col).alias("vec_id"), F.col(vec_col)
-                ),
-                "vec_id",
-            )
-            .select(
-                F.col("vec_id").alias(id_col), vec_col,
-                F.col("cell").alias("_cell"),
-            )
-        )
-        # same floor-form snap + cell tiebreak as the ivfpq probe, so
-        # the oracle's row_number ordering is bit-identical
-        dist2 = _floor6(
-            _sq_dist(
-                F.transform(F.col("q_vec"), lambda x: x.cast("double")),
-                F.col("centroid"),
-            )
+    if coarse is None:
+        coarse = pq_codebook(
+            corpus, m=1, k=n_lists, id_col=id_col, vec_col=vec_col
         )
     else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        corp = corpus.select(
-            F.col(id_col), F.col(vec_col),
-            array_to_vector(
-                F.col(vec_col).cast("array<double>")
-            ).alias("_feat"),
+        # ADVICE r11: an injected codebook that disagrees with
+        # n_lists would silently change the cell count and pruning
+        # semantics while n_lists still looks authoritative in the
+        # call — validate the (KB-scale, usually LocalRelation)
+        # injection before using it, mirroring _ivfpq_parts'
+        # both-or-neither pairing check.
+        got = sorted(
+            (r["s"], r["code"])
+            for r in coarse.select("s", "code").collect()
         )
-        model = KMeans(k=n_lists, seed=seed, featuresCol="_feat",
-                       predictionCol="_cell").fit(corp)
-        assigned = model.transform(corp).select(id_col, vec_col, "_cell")
-
-        centers = model.clusterCenters()
-        spark = corpus.sparkSession
-        centers_df = spark.createDataFrame(
-            [(int(i), [float(v) for v in c]) for i, c in enumerate(centers)],
-            "cell int, centroid array<double>",
+        want = [(0, c) for c in range(n_lists)]
+        if got != want:
+            raise ValueError(
+                f"ivf_topk: injected coarse codebook has cells "
+                f"{got[:8]}{'…' if len(got) > 8 else ''} but "
+                f"n_lists={n_lists} demands exactly s=0, codes "
+                f"0..{n_lists - 1} — stale or mismatched index "
+                f"injection"
+            )
+    centers_df = coarse.select(F.col("code").alias("cell"), "centroid")
+    assigned = (
+        pq_encode(corpus, coarse, m=1, id_col=id_col, vec_col=vec_col)
+        .select("vec_id", F.col("code").alias("cell"))
+        .join(
+            corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col)),
+            "vec_id",
         )
-        dist2 = F.aggregate(
-            F.zip_with(
-                F.col("q_vec"), F.col("centroid"),
-                lambda a, b: (a.cast("double") - b)
-                * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+        .select(
+            F.col("vec_id").alias(id_col), vec_col,
+            F.col("cell").alias("_cell"),
         )
+    )
+    # same floor-form snap + cell tiebreak as the ivfpq probe, so the
+    # oracle's row_number ordering is bit-identical
+    dist2 = _floor6(
+        _sq_dist(
+            F.transform(F.col("q_vec"), lambda x: x.cast("double")),
+            F.col("centroid"),
+        )
+    )
     # each query probes its n_probe closest centroids (euclidean, as the
     # quantizer was trained); the centroid table is tiny → broadcast
     q = queries.select(

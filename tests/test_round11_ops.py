@@ -81,9 +81,8 @@ def test_injected_ivfpq_fine_matches_internal_fit(spark):
 
 def test_ivfpq_injected_fine_not_attached_or_persisted(spark):
     """Caller-managed contract (code-review finding r11): with an
-    injected fine codebook, ivfpq_search must not persist it, must not
-    attach it for release, and eager=True must not run the fit-chain
-    machinery on it."""
+    injected fine codebook, ivfpq_search must not persist it and must
+    not attach it for release."""
     from pyspark import StorageLevel
 
     import __spark_entry__ as em
@@ -101,7 +100,7 @@ def test_ivfpq_injected_fine_not_attached_or_persisted(spark):
     fine = em._fit_ivfpq_fine(spark, emb, coarse, amap, m=4, k_codes=16)
     out = ivfpq_search(
         q, emb, k_coarse=8, m=4, k_codes=16, nprobe=2, k=5,
-        coarse=coarse, amap=amap, fine=fine, eager=True,
+        coarse=coarse, amap=amap, fine=fine,
     )
     out.count()
     assert fine.storageLevel == StorageLevel.NONE
@@ -125,19 +124,40 @@ def test_ivfpq_search_releases_amap_when_fine_fit_fails(spark, monkeypatch):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_ivf_topk_rejects_coarse_with_kmeans(spark):
+def test_ann_recall_audit_keeps_no_state(spark):
+    """Every audit call builds and fits its own plan: a repeat call on
+    the same inputs is a new DataFrame with the same rows."""
     import __spark_entry__ as em
-    from metrics_advisor_spark.functions.similarity import ivf_topk
+    from metrics_advisor_spark.functions.cacheutil import release_cached
+    from metrics_advisor_spark.functions.pq import ann_recall_audit
 
     emb = em._emb(spark, SF)
-    coarse = em._fit_codebook(spark, emb, m=1, k=8).select(
-        "s", "code", "centroid"
+    q = emb.filter(F.col("vec_id") < 5)
+    first = ann_recall_audit(q, emb, k=10, k_coarse=8, m=4, k_codes=16)
+    rows = sorted(map(tuple, first.collect()))
+    release_cached(first)
+    second = ann_recall_audit(q, emb, k=10, k_coarse=8, m=4, k_codes=16)
+    assert second is not first
+    assert sorted(map(tuple, second.collect())) == rows
+    release_cached(second)
+
+
+def test_fit_codebook_rejects_non_finite_centroid(spark):
+    """One all-NaN embedding makes a centroid non-finite; the injected
+    codebook must fail with a descriptive error, not unparseable SQL."""
+    import __spark_entry__ as em
+
+    emb = em._emb(spark, SF).withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") == 0,
+            F.transform(
+                "embedding", lambda x: F.lit(float("nan")).cast("float")
+            ),
+        ).otherwise(F.col("embedding")),
     )
-    with pytest.raises(ValueError, match="seeded"):
-        ivf_topk(
-            emb.limit(1), emb, k=3, n_lists=8, n_probe=2,
-            quantizer="kmeans", coarse=coarse,
-        )
+    with pytest.raises(ValueError, match="non-finite centroid"):
+        em._fit_codebook(spark, emb, m=4, k=16)
 
 
 def test_png_palette_index_out_of_range_raises():

@@ -124,17 +124,6 @@ def test_ivf_topk_recall_against_brute_force(spark):
     }
     recall = len(partial & exact) / len(exact)
     assert recall >= 0.5, f"recall {recall}"
-    # the MLlib-KMeans quantizer stays available behind quantizer=
-    # 'kmeans' (engine-specific RNG → not oracle-expressible, but its
-    # multi-iteration Lloyd cells remain the production recall option);
-    # full probing is exact regardless of quantizer
-    kfull = {
-        (r["query_id"], r["vec_id"])
-        for r in ivf_topk(
-            queries, emb, k=5, n_lists=8, n_probe=8, quantizer="kmeans"
-        ).collect()
-    }
-    assert kfull == exact
 
 
 def test_blocked_knn_graph_vs_exact(vectors):

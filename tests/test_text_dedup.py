@@ -384,3 +384,34 @@ def test_minhash_signatures_hof_fold_edge_semantics(spark):
 
     assert by_doc[1] == ref_sigs(["a", "b", "c", "d"])
     assert by_doc[3] == ref_sigs([""])
+
+
+def test_minhash_estimate_pair_broadcast_follows_session_threshold(
+    spark, docs
+):
+    """The pair-side broadcast hint of `minhash_jaccard_estimate` is
+    capped by ``spark.sql.autoBroadcastJoinThreshold`` (16 bytes per
+    pair): with broadcasts turned off (-1) the plan carries no hint,
+    and the rows equal those under the default threshold."""
+    from metrics_advisor_spark.functions.dedup import (
+        minhash_jaccard_estimate,
+    )
+
+    def run():
+        out = minhash_jaccard_estimate(docs, n=3, k=16, bands=4)
+        plan = out._jdf.queryExecution().analyzed().toString()
+        return plan.count("strategy=broadcast"), sorted(
+            map(tuple, out.collect())
+        )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    hints_default, rows_default = run()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        hints_off, rows_off = run()
+    finally:
+        spark.conf.set(key, old)
+    assert hints_default == 1
+    assert hints_off == 0
+    assert rows_default and rows_off == rows_default
